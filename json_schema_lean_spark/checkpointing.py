@@ -29,6 +29,7 @@ from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import __version__
 from .operators.validation import validate_spans_best
@@ -54,6 +55,16 @@ def list_input_files(input_path: str) -> list[str]:
     return sorted(
         os.path.join(input_path, f) for f in os.listdir(input_path)
         if f.endswith(".parquet") and not f.startswith("_"))
+
+
+def _default_keep(schema: StructType, spans_col: str) -> list[str]:
+    """keep_cols=None: the first input column other than ``spans_col`` (the
+    spans arrays themselves only when there is no other column). Taken from
+    the run's merged schema, whose column order follows the footer order,
+    so it must not be simply its first column: a file lacking doc_id that
+    sorts first would put the spans arrays into every unit's output."""
+    names = [f.name for f in schema.fields]
+    return [next((n for n in names if n != spans_col), names[0])]
 
 
 def plan_units(files: list[str], files_per_unit: int = 32) -> list[tuple[str, list[str]]]:
@@ -119,10 +130,10 @@ class CheckpointedValidation:
         # no-silent-caps accounting across units (VERDICT r4 #5)
         self.unit_fn = unit_fn
         # warm_start: force-JIT the unit plan on the SMALLEST input file
-        # before the first pending unit (default spans validation via
-        # warm_validation_codegen; r6: a custom unit_fn is warmed too — two
-        # noop-sink executions over the smallest file). Measured on the
-        # 12.1M-doc
+        # before the first pending unit: two noop-sink executions of the
+        # unit plan over the smallest file (warm_validation_codegen for the
+        # default spans validation, the unit_fn itself otherwise), once per
+        # run() that has units to process. Measured on the 12.1M-doc
         # run (16 units of 1.5M docs, local[32], fresh JVM, A/B repeated):
         # unit 0 falls 10.0-10.4 s -> 5.4-6.0 s for a 3.6-4.1 s warm-up —
         # WALL-NEUTRAL in a single shared JVM, but unit 0 stops being a
@@ -173,53 +184,40 @@ class CheckpointedValidation:
         """Process unfinished units (up to max_units — used to simulate a
         kill). Each unit is one distributed Spark job over its file group;
         ``concurrent_units`` (default: constructor value) > 1 overlaps
-        that many units as simultaneous jobs."""
+        that many units as simultaneous jobs. When units are pending, the
+        run first reads the footers of ALL input files once, merged into one
+        schema (one Spark job), so those footers must be mergeable: a column
+        whose type differs between two files fails the run before any unit
+        runs. keep_cols=None keeps the first column other than spans_col."""
         files = list_input_files(self.input_path)
         units = plan_units(files, self.files_per_unit)
-        skipped = processed = rows = valid = viols = 0
-        observed: dict = {}
-        warmup_sec = 0.0
-        pending = [u for u in units
-                   if not self._completed(u[0], _file_surrogate(u[1]))]
-        if pending and self.warm_start:
-            small_df = self.spark.read.parquet(min(files,
-                                                   key=os.path.getsize))
-            if self.unit_fn is None:
-                from .operators.validation import warm_validation_codegen
-                warmup_sec = warm_validation_codegen(
-                    small_df, self.schema_json, passes=2,
-                    spans_col=self.spans_col,
-                    keep_cols=(self.keep_cols if self.keep_cols is not None
-                               else [small_df.columns[0]]))
-            else:
-                # r6 (VERDICT r5 #7): custom-operator checkpointed runs used
-                # to skip the warm start entirely and pay the full first-unit
-                # JIT ramp. Run the unit_fn itself over the smallest input
-                # file and discard the output through the noop sink — the
-                # plan is built the same way the units build theirs (same
-                # schema, same read path => same generated stage source), so
-                # the JIT work transfers; only the final write stage differs.
-                # Each call must create its own fresh Observation (the
-                # documented unit_fn contract), so the extra executions
-                # cannot collide with the real units' metrics.
-                t0 = time.perf_counter()
-                for _ in range(2):
-                    out, _obs = self.unit_fn(self.spark, small_df)
-                    out.write.format("noop").mode("overwrite").save()
-                warmup_sec = round(time.perf_counter() - t0, 3)
-        todo: list = []
+        pending = []
         for unit_id, chunk in units:
             surrogate = _file_surrogate(chunk)
-            if self._completed(unit_id, surrogate):
-                skipped += 1
-                continue
-            if max_units is not None and len(todo) >= max_units:
-                break
-            todo.append((unit_id, chunk, surrogate))
+            if not self._completed(unit_id, surrogate):
+                pending.append((unit_id, chunk, surrogate))
+        skipped = len(units) - len(pending)
+        todo = pending if max_units is None else pending[:max_units]
+        if not todo:
+            return RunReport(self.run_id, len(units), skipped, 0, 0, 0, 0)
+        # ONE schema inference (one Spark job) per run; the warm-up and
+        # every unit then read with it instead of paying an inference job
+        # per read. mergeSchema unions the footers of ALL input files, so
+        # every unit reads and writes the same columns; a file that lacks
+        # a column reads it as null, which the validators treat as missing
+        # (tests/test_checkpoint.py).
+        schema = (self.spark.read.option("mergeSchema", "true")
+                  .parquet(*files).schema)
+        keep = (self.keep_cols if self.keep_cols is not None
+                else _default_keep(schema, self.spans_col))
+        warmup_sec = 0.0
+        if self.warm_start:
+            warmup_sec = self._warm_up(self.spark.read.schema(schema).parquet(
+                min(files, key=os.path.getsize)), keep)
         conc = (concurrent_units if concurrent_units is not None
                 else self.concurrent_units)
         if conc <= 1 or len(todo) <= 1:
-            entries = [self._process_unit(*t) for t in todo]
+            entries = [self._process_unit(*t, schema, keep) for t in todo]
         else:
             # driver threads submit units as overlapping Spark jobs: the
             # scheduler backfills idle cores of one unit's write/commit
@@ -239,9 +237,10 @@ class CheckpointedValidation:
             from concurrent.futures import ThreadPoolExecutor
             with ThreadPoolExecutor(max_workers=conc) as pool:
                 entries = list(pool.map(
-                    lambda t: self._process_unit(*t), todo))
+                    lambda t: self._process_unit(*t, schema, keep), todo))
+        rows = valid = viols = 0
+        observed: dict = {}
         for entry in entries:
-            processed += 1
             rows += entry["rows_scanned"]
             if entry["valid_rows"] is not None:
                 valid += entry["valid_rows"]
@@ -254,27 +253,46 @@ class CheckpointedValidation:
                             observed[k] = max(observed.get(k, v), v)
                         else:
                             observed[k] = observed.get(k, 0) + v
-        return RunReport(self.run_id, len(units), skipped, processed,
+        return RunReport(self.run_id, len(units), skipped, len(entries),
                          rows, valid, viols, observed or None,
                          warmup_sec)
 
-    def _process_unit(self, unit_id: str, chunk: list,
-                      surrogate: str) -> dict:
-        """Validate + commit ONE unit; returns its manifest entry. Safe to
-        call from several driver threads (concurrent_units>1): every
-        side effect is unit-scoped (part dir, manifest file)."""
+    def _warm_up(self, small_df: DataFrame, keep: list) -> float:
+        """Run the unit plan over ``small_df`` (the smallest input file) and
+        discard the result; returns seconds spent."""
+        if self.unit_fn is None:
+            from .operators.validation import warm_validation_codegen
+            return warm_validation_codegen(
+                small_df, self.schema_json, passes=2,
+                spans_col=self.spans_col, keep_cols=keep)
+        # a custom unit_fn: run it over the smallest input file and
+        # discard the output through the noop sink — the plan is built
+        # the same way the units build theirs (same schema, same read
+        # path => same generated stage source), so the JIT work
+        # transfers; only the final write stage differs. Each call must
+        # create its own fresh Observation (the documented unit_fn
+        # contract), so the extra executions cannot collide with the
+        # real units' metrics.
         t0 = time.perf_counter()
-        df = self.spark.read.parquet(*chunk)
+        for _ in range(2):
+            out, _obs = self.unit_fn(self.spark, small_df)
+            out.write.format("noop").mode("overwrite").save()
+        return round(time.perf_counter() - t0, 3)
+
+    def _process_unit(self, unit_id: str, chunk: list, surrogate: str,
+                      schema: StructType, keep: list) -> dict:
+        """Validate + commit ONE unit read with the run's ``schema``,
+        keeping the run's ``keep`` columns; returns its manifest entry. Safe to call from several driver
+        threads (concurrent_units>1): every side effect is unit-scoped
+        (part dir, manifest file)."""
+        t0 = time.perf_counter()
+        df = self.spark.read.schema(schema).parquet(*chunk)
         obs = None
         if self.unit_fn is not None:
             out, obs = self.unit_fn(self.spark, df)
         else:
             # strategy chain (fused zero-shuffle first; r3 — was pinned
-            # to the explode strategy). keep_cols default stays "first
-            # column only": fused's own default of all columns would
-            # carry the spans arrays into every unit's output
-            keep = (self.keep_cols if self.keep_cols is not None
-                    else [df.columns[0]])
+            # to the explode strategy)
             out = validate_spans_best(
                 df, self.schema_json, spans_col=self.spans_col,
                 keep_cols=keep)

@@ -69,7 +69,8 @@ class FusedUnsupported(Exception):
 #: '^foo.bar' must fall back to the general strategies where it keeps its
 #: any-char meaning (ADVICE r1: dotted patterns diverged here). ASCII-only
 #: is also what makes the range check's succ() byte-order argument exact.
-_PREFIX_LITERAL = re.compile(r"^\^[A-Za-z0-9_\-:/ @]+$")
+#: ``\Z``, not ``$``: ``$`` would also admit a trailing newline.
+_PREFIX_LITERAL = re.compile(r"^\^[A-Za-z0-9_\-:/ @]+\Z")
 
 
 def _resolve_once(comp: ColumnarCompiler, schema: Schema, base_uri: str,
@@ -391,6 +392,9 @@ def _fused_property_clauses(s: SchemaObject, field_arr: Column,
         # newline-join trick and its embedded-newline slow branch (which
         # this replaces) all disappear; empty/all-null arrays yield null
         # min/max -> coalesce(True), the old n_elems==0 branch.
+        # succ stays one ASCII byte only below DEL (0x7F): the range
+        # check is exact only for the alphabet _PREFIX_LITERAL admits
+        assert ord(prefix[-1]) < 0x7F, prefix
         succ = prefix[:-1] + chr(ord(prefix[-1]) + 1)
         out.append(
             F.coalesce(F.array_min(field_arr) >= F.lit(prefix), F.lit(True))

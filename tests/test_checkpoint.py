@@ -2,6 +2,7 @@
 row-identical to a fresh full run, including span-sequence preservation."""
 
 import json
+import os
 import shutil
 
 import pytest
@@ -367,3 +368,84 @@ def test_concurrent_units_with_range_partitions(spark, spans_path, tmp_path):
         spark.read.parquet(spans_path), SPAN_SCHEMA).collect())
     assert sum(e["rows_scanned"] for e in ck.manifest()) == \
         spark.read.parquet(spans_path).count()
+
+
+def _jobs_in(spark, group, fn):
+    """(fn(), number of Spark jobs fn launched), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_launches_one_job_per_unit_plus_one(spark, spans_path,
+                                                tmp_path):
+    """Without the warm-up, run() over N pending units launches N + 1
+    jobs: one schema inference for the whole run, then one write per unit
+    (no per-unit inference job)."""
+    out_dir = str(tmp_path / "out")
+    first = CheckpointedValidation(spark, spans_path, SPAN_SCHEMA, out_dir,
+                                   files_per_unit=2, warm_start=False)
+    r1, jobs = _jobs_in(spark, "ckpt-job-count-first",
+                        lambda: first.run(max_units=1))
+    assert r1.units_processed == 1 and jobs == 2, jobs
+    resume = CheckpointedValidation(spark, spans_path, SPAN_SCHEMA, out_dir,
+                                    files_per_unit=2, warm_start=False)
+    r2, jobs = _jobs_in(spark, "ckpt-job-count", resume.run)
+    assert r2.warmup_sec == 0.0 and r2.units_skipped == 1
+    assert r2.units_processed == r2.units_total - 1 >= 2
+    assert jobs == r2.units_processed + 1, jobs
+    # nothing pending: no job at all (not even the schema inference)
+    r3, jobs = _jobs_in(spark, "ckpt-job-count-done", resume.run)
+    assert r3.units_processed == 0 and jobs == 0
+
+
+@pytest.mark.parametrize("position", ["first", "last"])
+def test_file_missing_a_column(spark, spans_path, tmp_path, position):
+    """One input file lacks doc_id, which the other files have. The run reads
+    every unit with one schema (merged over all input footers): each unit's
+    verdicts and violations equal those of validating its file alone, and
+    every unit keeps doc_id (not the spans arrays), wherever that file
+    sorts."""
+    from json_schema_lean_spark.operators.validation import (
+        validate_spans_best,
+    )
+    src = sorted(f for f in os.listdir(spans_path) if f.endswith(".parquet"))
+    inp = tmp_path / "in"
+    inp.mkdir()
+    for f in src[:3]:
+        shutil.copy(os.path.join(spans_path, f), inp / f)
+    lacking = str(tmp_path / "lacking")
+    (spark.read.parquet(os.path.join(spans_path, src[3])).drop("doc_id")
+     .coalesce(1).write.parquet(lacking))
+    part = [f for f in os.listdir(lacking) if f.endswith(".parquet")][0]
+    name = ("a-" if position == "first" else "z-") + "no-doc-id.parquet"
+    shutil.copy(os.path.join(lacking, part), inp / name)
+
+    out_dir = str(tmp_path / "out")
+    ck = CheckpointedValidation(spark, str(inp), SPAN_SCHEMA, out_dir,
+                                files_per_unit=1)
+    r = ck.run()
+    assert r.units_processed == r.units_total == 4
+
+    def verdicts(df):
+        return sorted((row["valid"],
+                       tuple(sorted((v["keyword"], v["json_pointer"],
+                                     v["message"])
+                                    for v in row["violations"])))
+                      for row in df.select("valid", "violations").collect())
+
+    columns = set()
+    for e in ck.manifest():
+        (path,) = e["input_files"]
+        got = spark.read.parquet(f"{out_dir}/parts/{e['unit_id']}")
+        columns.add(tuple(got.columns))
+        alone = validate_spans_best(spark.read.parquet(path), SPAN_SCHEMA)
+        assert verdicts(got) == verdicts(alone), path
+    assert columns == {("doc_id", "valid", "violations")}, columns
+    lacking_unit = [e for e in ck.manifest()
+                    if e["input_files"][0].endswith(name)]
+    assert lacking_unit[0]["valid_rows"] == 0  # doc_id is required

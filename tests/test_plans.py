@@ -149,9 +149,19 @@ def test_fused_maxlength_zero(spark):
     assert got == {"a": True, "b": False, "c": True}
 
 
+def _last_sql_plans(spark, n):
+    """Physical plans of the last ``n`` SQL executions (status store)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [execs.apply(i).physicalPlanDescription()
+            for i in range(execs.size() - n, execs.size())]
+
+
 def test_warm_validation_codegen_is_plan_neutral(spark):
     """warm_validation_codegen must leave verdicts untouched (it only runs
-    the SAME plan over a prefix) and return the seconds it spent."""
+    the SAME plan over a prefix) and return the seconds it spent. Every
+    pass must execute the validation itself: a count over the validated
+    rows prunes the verdict projection down to a bare scan."""
     from json_schema_lean_spark.operators.validation import (
         validate_spans_best,
         warm_validation_codegen,
@@ -166,6 +176,80 @@ def test_warm_validation_codegen_is_plan_neutral(spark):
     spent = warm_validation_codegen(df, SPAN_SCHEMA, rows=50, passes=2,
                                     keep_cols=["doc_id"])
     assert isinstance(spent, float) and spent > 0
+    for plan in _last_sql_plans(spark, 2):
+        assert " AS valid#" in plan, plan
     after = {r["doc_id"]: r["valid"] for r in validate_spans_best(
         df, SPAN_SCHEMA, keep_cols=["doc_id"]).collect()}
     assert before == after
+
+
+def test_violation_rows_fast_has_no_filter_above_posexplode(spark, spans_path):
+    """violation_rows_fast explodes the violation expression directly. A
+    size() > 0 filter above the posexplode Generate (written, or inferred
+    by Catalyst from an explode over a projected column) gets pushed below
+    the projection and builds the whole violation concat twice per span
+    row; explode already drops empty and null arrays."""
+    from json_schema_lean_spark.operators.validation import (
+        violation_rows_fast,
+    )
+    spans = spark.read.parquet(spans_path)
+    out = violation_rows_fast(spans, SPAN_SCHEMA, id_cols=["doc_id"])
+    ops = [line.lstrip(" +-:*()0123456789")
+           for line in explain_str(out, "simple").splitlines()]
+    gen = next(i for i, op in enumerate(ops)
+               if op.startswith("Generate posexplode"))
+    assert not [op for op in ops[:gen] if op.startswith("Filter")], ops[:gen]
+    assert out.count() > 0
+
+
+def test_prefix_literal_alphabet_is_ascii():
+    """The fused string-range check (array_max < succ(prefix)) is exact only
+    for single-byte prefixes whose last char has an ASCII successor: pin
+    the exact alphabet _PREFIX_LITERAL admits."""
+    from json_schema_lean_spark.plans.fused import _PREFIX_LITERAL
+    admitted = {chr(c) for c in range(0x3000)
+                if _PREFIX_LITERAL.match("^a" + chr(c))}
+    expected = set("ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
+                   "0123456789_-:/ @")
+    assert admitted == expected
+    assert all(ord(c) < 0x7F for c in admitted)
+    for bad in ("^foo.bar", "^abc\n", "^", "foo", "^café", "^a$"):
+        assert not _PREFIX_LITERAL.match(bad), bad
+    assert _PREFIX_LITERAL.match("^asset://")
+
+
+def test_fused_rejects_null_or_missing_required_enum(spark):
+    """covers_nulls: the required-kind presence clause is dropped because
+    the enum check over the raw field array already fails on a null kind.
+    Docs whose ONLY defect is a null or absent kind in one span must still
+    be rejected, agreeing with the interpreter (absent key: required; JSON
+    null: enum)."""
+    from json_schema_lean_spark.interpreter import CompiledValidator
+
+    ok = ("text", "tok w1", None, 0)
+    img = ("image", None, "asset://blob/000001", 3)
+    no_kind = (None, "tok w2", None, 1)
+    rows = [
+        ("doc-ok", [ok, img]),
+        ("doc-first", [no_kind, ok]),
+        ("doc-middle", [ok, no_kind, img]),
+        ("doc-last", [img, (None, None, "asset://blob/000002", 2)]),
+        ("doc-only", [no_kind]),
+    ]
+    ddl = ("doc_id string, spans array<struct<kind:string,text:string,"
+           "media_ref:string,offset:int>>")
+    df = spark.createDataFrame(rows, ddl)
+    got = {r["doc_id"]: r["valid"] for r in validate_documents_fused(
+        df, SPAN_SCHEMA, keep_cols=["doc_id"],
+        with_violations=False).collect()}
+    assert got == {"doc-ok": True, "doc-first": False, "doc-middle": False,
+                   "doc-last": False, "doc-only": False}
+    ref = CompiledValidator(SPAN_SCHEMA)
+    keys = ("kind", "text", "media_ref", "offset")
+    for doc_id, spans in rows:
+        for keep_null_kind in (False, True):  # absent key / JSON null
+            doc = {"doc_id": doc_id, "spans": [
+                {k: v for k, v in zip(keys, s)
+                 if v is not None or (keep_null_kind and k == "kind")}
+                for s in spans]}
+            assert ref.is_valid(doc) == got[doc_id], (doc_id, doc)
