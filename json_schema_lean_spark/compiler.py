@@ -57,6 +57,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .pointer import escape_token
 from .resolver import DEFAULT_URI, Resolver, SchemaCycleError, find_ref_cycle, resolve_uri
 from .schema_ast import ABSENT, Schema, SchemaObject, parse_schema
 
@@ -105,6 +106,25 @@ def _guard(col: Column, pred: Column) -> Column:
     """Keyword check passes when the value is absent (null) — reference
     type-guard semantics. Also forces three-valued logic to a definite bool."""
     return F.when(col.isNull(), F.lit(True)).otherwise(F.coalesce(pred, F.lit(False)))
+
+
+def _let(expr: Column, fn: Callable[[Column], Column]) -> Column:
+    """Let-binding inside an expression: evaluate ``expr`` ONCE and pass it
+    to ``fn`` as a real lambda variable. Catalyst inlines every aliased
+    reference and has no common-subexpression reuse for interpreted
+    expressions (array_compact, for one, is rewritten to an interpreted
+    lambda filter), so an expression referenced inside a HOF lambda is
+    RE-EVALUATED per element — a sort referenced from a filter lambda
+    becomes O(n² log n) (measured: the first run-length char_entropy did
+    exactly that, 55 -> 165 s). A higher-order function evaluates its
+    array argument once and binds it as a real attribute."""
+    return F.get(F.transform(F.array(expr), fn), 0)
+
+
+def _ptr_key(key: Column) -> Column:
+    """RFC 6901 token escaping for a runtime key Column (~ -> ~0, / -> ~1);
+    pointer.escape_token is the driver-side twin."""
+    return F.regexp_replace(F.regexp_replace(key, "~", "~0"), "/", "~1")
 
 
 def _concat_viols(parts: list[Column]) -> Column:
@@ -661,7 +681,7 @@ class ColumnarCompiler:
                 if name not in field_type:
                     continue  # key can never be present -> check never fires
                 low = self._lower(sub, field_type[name], base_uri, depth + 1)
-                tok = name.replace("~", "~0").replace("/", "~1")
+                tok = escape_token(name)
 
                 def v_fn(c: Column, lo=low, k=name) -> Column:
                     return F.when(c.isNull() | c.getField(k).isNull(), F.lit(True)) \
@@ -732,8 +752,7 @@ class ColumnarCompiler:
                                         F.when(present(c, k), F.array(_viol(
                                             "false",
                                             F.concat(p, F.lit(
-                                                "/" + k.replace("~", "~0")
-                                                        .replace("/", "~1"))),
+                                                "/" + escape_token(k))),
                                             "Boolean schema 'false' rejects "
                                             "all values")))
                                          .otherwise(F.array()
@@ -747,7 +766,7 @@ class ColumnarCompiler:
                     for k in extra:
                         low = self._lower(s.additional_properties, field_type[k],
                                           base_uri, depth + 1)
-                        tok = k.replace("~", "~0").replace("/", "~1")
+                        tok = escape_token(k)
 
                         def v_fn(c: Column, lo=low, kk=k) -> Column:
                             return F.when(c.isNull() | c.getField(kk).isNull(), F.lit(True)) \
@@ -769,7 +788,7 @@ class ColumnarCompiler:
                     if re.search(pat, k) is None:
                         continue
                     low = self._lower(sub, field_type[k], base_uri, depth + 1)
-                    tok = k.replace("~", "~0").replace("/", "~1")
+                    tok = escape_token(k)
 
                     def v_fn(c: Column, lo=low, kk=k) -> Column:
                         return F.when(c.isNull() | c.getField(kk).isNull(), F.lit(True)) \
@@ -846,7 +865,7 @@ class ColumnarCompiler:
         if s.properties:
             for name, sub in s.properties:
                 low = self._lower(sub, val_t, base_uri, depth + 1)
-                tok = name.replace("~", "~0").replace("/", "~1")
+                tok = escape_token(name)
 
                 def v_fn(c: Column, lo=low, k=name) -> Column:
                     return F.when(c.isNull() | ~F.map_contains_key(c, k),
@@ -891,10 +910,6 @@ class ColumnarCompiler:
             if jpat is None:
                 raise CompileFallback(f"patternProperties regex {pat!r}")
             pattern_res.append(jpat)
-        def _entry_key_ptr(kv: Column) -> Column:
-            return F.regexp_replace(
-                F.regexp_replace(kv.getField("key"), "~", "~0"), "/", "~1")
-
         def _entries_viols(entries_fn, low):
             """Recurse into each entry's value with a per-key pointer."""
             def viol_fn(c: Column, p: Column) -> Column:
@@ -903,7 +918,8 @@ class ColumnarCompiler:
                             entries_fn(c),
                             lambda kv: low.violations(
                                 kv.getField("value"),
-                                F.concat(p, F.lit("/"), _entry_key_ptr(kv))))))
+                                F.concat(p, F.lit("/"),
+                                         _ptr_key(kv.getField("key")))))))
             return viol_fn
 
         if s.pattern_properties:
@@ -946,7 +962,7 @@ class ColumnarCompiler:
                                     lambda kv: F.struct(
                                         F.lit("false").alias("keyword"),
                                         F.concat(p, F.lit("/"),
-                                                 _entry_key_ptr(kv))
+                                                 _ptr_key(kv.getField("key")))
                                          .alias("json_pointer"),
                                         F.lit("Boolean schema 'false' "
                                               "rejects all values")

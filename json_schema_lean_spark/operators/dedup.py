@@ -18,7 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .text import _let, fingerprint, word_ngrams
+from ..compiler import _let
+from .text import fingerprint, word_ngrams
 
 
 def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..compiler import _let
+
 # tiny per-language stopword marker sets for the n-gram/stopword language
 # heuristic — deliberately small + deterministic
 _LANG_MARKERS: dict[str, list[str]] = {
@@ -19,17 +21,6 @@ _LANG_MARKERS: dict[str, list[str]] = {
 }
 
 _STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
-
-
-def _let(expr: Column, fn) -> Column:
-    """Let-binding inside an expression: evaluate ``expr`` ONCE and pass it
-    to ``fn`` as a real lambda variable. Catalyst inlines every aliased
-    reference and has no common-subexpression reuse for interpreted
-    expressions, so an expression referenced inside a HOF lambda is
-    RE-EVALUATED per element — a sort referenced from a filter lambda
-    becomes O(n² log n) (measured: the first run-length char_entropy did
-    exactly that, 55 -> 165 s). Same trick as plans/fused._let."""
-    return F.get(F.transform(F.array(expr), fn), 0)
 
 
 def token_count(text: Column) -> Column:

@@ -26,13 +26,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StructType
-
-from pyspark.sql.types import ArrayType
+from pyspark.sql.types import ArrayType, StructType
 
 from ..compiler import VIOLATION_SCHEMA, ColumnarCompiler, CompileFallback
 from ..interpreter import DEFAULT_FUEL, CompiledValidator
 from ..plan_cache import plan_memo
+from ..plans.fused import validate_documents_fused
 from ..schema_ast import SchemaObject, parse_schema
 
 RESULT_SCHEMA = (
@@ -80,6 +79,72 @@ def validate_dataframe(
     })
 
 
+def split_doc_spans(df: DataFrame, schema_json: Any, spans_col: str,
+                    registry: Optional[dict[str, Any]], uri: str,
+                    message_style: str, assert_formats: bool) -> tuple:
+    """The front half every spans strategy shares (fused, explode and
+    violation rows). Returns ``(comp, doc_valid, doc_viols, items,
+    elem_dtype)``: the root compiler; the verdict of the schema minus the
+    spans' ``items`` (NULL counts as failing); a thunk building that
+    verdict's gated violations (the fused plan takes its detail from the
+    full forall plan, and the collector took ~50 ms of py4j calls for
+    SPAN_SCHEMA on 4 cores); the items subschema and the element dtype.
+    Raises CompileFallback, the chain's one decline signal, when the input
+    is not spans-shaped (object schema, an array column ``spans_col`` with
+    a Single-items property) or the doc level does not lower."""
+    parsed = parse_schema(schema_json)
+    if not isinstance(parsed, SchemaObject) or parsed.properties is None:
+        raise CompileFallback("spans strategies need an object schema")
+    span_prop = parsed.raw.get("properties", {}).get(spans_col)
+    if span_prop is None or not isinstance(df.schema[spans_col].dataType, ArrayType):
+        raise CompileFallback("spans strategies need the array column")
+    items = span_prop.get("items")
+    if items is None or isinstance(items, list):
+        raise CompileFallback("spans strategies need Single-items semantics")
+
+    # doc-level plan: same schema minus the spans items subschema (array-
+    # size keywords stay doc-level), lowered as a NODE of a compiler for
+    # the ORIGINAL root so root-relative $refs (e.g. '#/properties/x')
+    # still resolve (ADVICE r1)
+    span_prop_doc = {k: v for k, v in span_prop.items() if k != "items"}
+    doc_schema_json = {**parsed.raw, "properties": {
+        **parsed.raw["properties"], spans_col: span_prop_doc}}
+    comp = ColumnarCompiler(schema_json, uri=uri, registry=registry,
+                            message_style=message_style,
+                            assert_formats=assert_formats)
+    doc_low = comp.lower_node(doc_schema_json, StructType(df.schema.fields),
+                              base_uri=uri)
+
+    instance = F.struct(*[F.col(c) for c in df.columns])
+    doc_valid = F.coalesce(doc_low.valid(instance), F.lit(False))
+
+    def doc_viols() -> Column:
+        return F.when(doc_valid, F.array().cast(VIOLATION_SCHEMA)) \
+                .otherwise(doc_low.violations(instance, F.lit("")))
+    elem_dtype = df.schema[spans_col].dataType.elementType
+    return comp, doc_valid, doc_viols, items, elem_dtype
+
+
+def span_checks(comp: ColumnarCompiler, items: Any, elem_dtype: Any,
+                spans_col: str) -> tuple[Column, Column]:
+    """Per-span verdict and verdict-gated violations over the generator
+    columns ``_pos``/``_span`` of ``posexplode_outer(spans_col)``. The items
+    subschema is lowered as a NODE of the root compiler (full resolver
+    context); the null row of an empty or null spans array passes."""
+    elem_low = comp.lower_node(items, elem_dtype,
+                               base_uri=comp.root_base_uri(),
+                               null_means="null")
+    span_valid = F.when(F.col("_pos").isNull(), F.lit(True)) \
+                  .otherwise(F.coalesce(elem_low.valid(F.col("_span")),
+                                        F.lit(False)))
+    span_viols = F.when(span_valid, F.array().cast(VIOLATION_SCHEMA)) \
+                  .otherwise(elem_low.violations(
+                      F.col("_span"),
+                      F.concat(F.lit(f"/{spans_col}/"),
+                               F.col("_pos").cast("string"))))
+    return span_valid, span_viols
+
+
 def validate_documents_exploded(
     df: DataFrame,
     schema_json: Any,
@@ -103,62 +168,19 @@ def validate_documents_exploded(
     input bytes at 100 TB — with map-side partial aggregation; AQE coalesces
     and splits skewed reducers.
     """
-    parsed = parse_schema(schema_json)
-    if not isinstance(parsed, SchemaObject) or parsed.properties is None:
-        raise CompileFallback("explode strategy needs an object schema")
-    spans_schema = dict((parsed.raw or {}).get("properties", {}))
-    span_prop = spans_schema.pop(spans_col, None)
-    if span_prop is None or not isinstance(df.schema[spans_col].dataType, ArrayType):
-        raise CompileFallback("explode strategy needs an array column")
-    items = span_prop.get("items")
-    if items is None or isinstance(items, list):
-        raise CompileFallback("explode strategy needs Single-items semantics")
-
-    def build() -> dict:
-        # --- doc-level plan: same schema minus the spans items subschema,
-        # but compiled with the ORIGINAL root registered so root-relative
-        # $refs (e.g. '#/properties/x') still resolve (ADVICE r1) ---------
-        doc_schema_json = dict(parsed.raw)
-        doc_props = dict(doc_schema_json.get("properties", {}))
-        span_prop_doc = dict(span_prop)
-        span_prop_doc.pop("items", None)  # array-size keywords stay doc-level
-        doc_props[spans_col] = span_prop_doc
-        doc_schema_json["properties"] = doc_props
-        comp = ColumnarCompiler(schema_json, uri=uri, registry=registry,
-                                message_style=message_style,
-                                assert_formats=assert_formats)
-        doc_dtype = StructType([f for f in df.schema.fields])
-        doc_low = comp.lower_node(doc_schema_json, doc_dtype, base_uri=uri)
-
-        # --- span-level plan: items subschema against the element struct,
-        # lowered as a NODE of the root compiler (full resolver context) --
-        elem_t = df.schema[spans_col].dataType.elementType
-        elem_low = comp.lower_node(items, elem_t,
-                                   base_uri=comp.root_base_uri(),
-                                   null_means="null")
-
-        instance = F.struct(*[F.col(c) for c in df.columns])
-        doc_valid = F.coalesce(doc_low.valid(instance), F.lit(False))
-        doc_viols = F.when(doc_valid, F.array().cast(VIOLATION_SCHEMA)) \
-                     .otherwise(doc_low.violations(instance, F.lit("")))
-        span_valid = F.when(F.col("_pos").isNull(), F.lit(True)) \
-                      .otherwise(F.coalesce(elem_low.valid(F.col("_span")),
-                                            F.lit(False)))
-        span_viols = F.when(span_valid, F.array().cast(VIOLATION_SCHEMA)) \
-                      .otherwise(elem_low.violations(
-                          F.col("_span"),
-                          F.concat(F.lit(f"/{spans_col}/"),
-                                   F.col("_pos").cast("string"))))
-        return {"dok": doc_valid, "dviols": doc_viols,
-                "sv": span_valid, "svv": span_viols}
+    def build() -> tuple:
+        comp, doc_valid, doc_viols, items, elem_t = split_doc_spans(
+            df, schema_json, spans_col, registry, uri, message_style,
+            assert_formats)
+        return (doc_valid, doc_viols()) + span_checks(comp, items, elem_t,
+                                                      spans_col)
 
     # schema-derived Columns are unresolved and name-bound: memoized so a
     # checkpointed run's per-unit loop (checkpointing.run) and repeat batches
     # skip the py4j expression rebuild (plan_cache docstring)
-    plan = plan_memo("exploded", df, schema_json, registry,
-                     (spans_col, uri, message_style, assert_formats), build)
-    doc_valid, doc_viols = plan["dok"], plan["dviols"]
-    span_valid, span_viols = plan["sv"], plan["svv"]
+    doc_valid, doc_viols, span_valid, span_viols = plan_memo(
+        "exploded", df, schema_json, registry,
+        (spans_col, uri, message_style, assert_formats), build)
 
     # doc-level checks are row-local: evaluate them BEFORE the explode so the
     # document (and its spans array) is never duplicated per span row. Only
@@ -227,50 +249,11 @@ def violation_rows_fast(
     generator row (_pos 0 or null-spans row). Plan = Scan -> Generate ->
     Project -> Filter -> Generate; every stage is pipelined, nothing moves.
     """
-    parsed = parse_schema(schema_json)
-    if not isinstance(parsed, SchemaObject) or parsed.properties is None:
-        raise CompileFallback("violation_rows_fast needs an object schema")
-    span_prop = dict((parsed.raw or {}).get("properties", {})).get(spans_col)
-    if span_prop is None or not isinstance(df.schema[spans_col].dataType, ArrayType):
-        raise CompileFallback("violation_rows_fast needs the array column")
-    items = span_prop.get("items")
-    if items is None or isinstance(items, list):
-        raise CompileFallback("violation_rows_fast needs Single-items semantics")
-
-    def build() -> dict:
-        # doc-level plan (schema minus items) + span-level plan, as in the
-        # explode strategy: both lowered as NODES of the root compiler so
-        # root-relative $refs keep resolving (ADVICE r1)
-        doc_schema_json = dict(parsed.raw)
-        doc_props = dict(doc_schema_json.get("properties", {}))
-        span_prop_doc = dict(span_prop)
-        span_prop_doc.pop("items", None)
-        doc_props[spans_col] = span_prop_doc
-        doc_schema_json["properties"] = doc_props
-        comp = ColumnarCompiler(schema_json, uri=uri, registry=registry,
-                                message_style=message_style,
-                                assert_formats=assert_formats)
-        doc_dtype = StructType([f for f in df.schema.fields])
-        doc_low = comp.lower_node(doc_schema_json, doc_dtype, base_uri=uri)
-
-        elem_t = df.schema[spans_col].dataType.elementType
-        elem_low = comp.lower_node(items, elem_t,
-                                   base_uri=comp.root_base_uri(),
-                                   null_means="null")
-
-        instance = F.struct(*[F.col(c) for c in df.columns])
-        doc_valid = F.coalesce(doc_low.valid(instance), F.lit(False))
-        doc_viols = F.when(doc_valid, F.array().cast(VIOLATION_SCHEMA)) \
-                     .otherwise(doc_low.violations(instance, F.lit("")))
-
-        span_valid = F.when(F.col("_pos").isNull(), F.lit(True)) \
-                      .otherwise(F.coalesce(elem_low.valid(F.col("_span")),
-                                            F.lit(False)))
-        span_viols = F.when(span_valid, F.array().cast(VIOLATION_SCHEMA)) \
-                      .otherwise(elem_low.violations(
-                          F.col("_span"),
-                          F.concat(F.lit(f"/{spans_col}/"),
-                                   F.col("_pos").cast("string"))))
+    def build() -> tuple:
+        comp, _doc_valid, doc_viols, items, elem_t = split_doc_spans(
+            df, schema_json, spans_col, registry, uri, message_style,
+            assert_formats)
+        _span_valid, span_viols = span_checks(comp, items, elem_t, spans_col)
         # doc-level violations attach exactly once per doc: on the first
         # generator row (pos 0, or the null row for empty/null spans)
         first_row = F.col("_pos").isNull() | (F.col("_pos") == 0)
@@ -278,39 +261,27 @@ def violation_rows_fast(
             F.when(first_row, F.col("_dviols"))
              .otherwise(F.array().cast(VIOLATION_SCHEMA)),
             span_viols)
-        return {
-            "dviols": doc_viols.alias("_dviols"),
-            "posexp": F.posexplode_outer(F.col(spans_col))
-                       .alias("_pos", "_span"),
-            "v": all_viols,
-            "span_idx": F.nullif(
-                F.regexp_extract(F.col("v.json_pointer"),
-                                 f"^/{spans_col}/(\\d+)", 1), F.lit(""))
-                .cast("int").alias("span_idx"),
-        }
+        return (doc_viols().alias("_dviols"),
+                F.posexplode_outer(F.col(spans_col)).alias("_pos", "_span"),
+                all_viols)
 
     # unresolved name-bound Columns: memoized per (schema, dtype, options) —
     # repeat batches skip the py4j expression rebuild (plan_cache docstring).
     # id_cols are plain strings passed straight to select, not part of the
     # cached expressions.
-    plan = plan_memo("violation_rows_fast", df, schema_json, registry,
-                     (spans_col, uri, message_style, assert_formats), build)
+    dviols, posexp, viols = plan_memo(
+        "violation_rows_fast", df, schema_json, registry,
+        (spans_col, uri, message_style, assert_formats), build)
 
     ids = id_cols if id_cols is not None else [df.columns[0]]
-    base = df.select(*ids, plan["dviols"], plan["posexp"])
+    base = df.select(*ids, dviols, posexp)
     # explode the violation expression itself, not a projected _v column:
     # explode already emits no row for an empty or null array, and over an
     # attribute input Catalyst infers a size(_v) > 0 filter, pushes it
     # below the projection and so builds the whole violation concat twice
     # per span row (tests/test_plans.py pins the plan)
-    flat = base.select(*ids, F.explode(plan["v"]).alias("v"))
-    return flat.select(
-        *ids,
-        plan["span_idx"],
-        F.col("v.keyword").alias("keyword"),
-        F.col("v.json_pointer").alias("json_pointer"),
-        F.col("v.message").alias("message"),
-    )
+    flat = base.select(*ids, F.explode(viols).alias("v"))
+    return flat.select(*_violation_row_cols(ids, spans_col))
 
 
 def violation_rows_best(
@@ -327,22 +298,27 @@ def violation_rows_best(
     first, so only failing docs — rare at production quality rates (~2% in
     the bench corpus) — pay the posexplode + per-span violation collection.
     Output is row-identical to violation_rows_fast (passing docs contribute
-    no rows by definition; pinned in tests). Falls back to the single-pass
-    form when the schema is outside the fused subset."""
-    from ..plans.fused import FusedUnsupported, validate_documents_fused
+    no rows by definition; pinned in tests). The chain has one decline
+    signal, CompileFallback: a schema outside the fused subset skips the
+    prefilter, and when violation_rows_fast declines too the rows come from
+    :func:`violation_rows` over :func:`validate_spans_best`, whose own last
+    resort is the interpreter — so every schema the interpreter accepts
+    yields rows."""
+    kw = dict(spans_col=spans_col, registry=registry, uri=uri,
+              assert_formats=assert_formats)
     try:
         flagged = validate_documents_fused(
-            df, schema_json, spans_col=spans_col, registry=registry, uri=uri,
-            keep_cols=list(df.columns), with_violations=False,
-            assert_formats=assert_formats)
-    except FusedUnsupported:
-        return violation_rows_fast(df, schema_json, spans_col=spans_col,
-                                   id_cols=id_cols, registry=registry, uri=uri,
-                                   assert_formats=assert_formats)
-    failing = flagged.where(~F.col("valid")).drop("valid")
-    return violation_rows_fast(failing, schema_json, spans_col=spans_col,
-                               id_cols=id_cols, registry=registry, uri=uri,
-                               assert_formats=assert_formats)
+            df, schema_json, keep_cols=list(df.columns),
+            with_violations=False, **kw)
+        failing = flagged.where(~F.col("valid")).drop("valid")
+    except CompileFallback:
+        failing = df
+    try:
+        return violation_rows_fast(failing, schema_json, id_cols=id_cols, **kw)
+    except CompileFallback:
+        ids = id_cols if id_cols is not None else [df.columns[0]]
+        return violation_rows(validate_spans_best(df, schema_json, **kw),
+                              ids, spans_col)
 
 
 def partition_verdict_metrics(validated: DataFrame) -> DataFrame:
@@ -367,16 +343,35 @@ def violation_rows(validated: DataFrame, id_cols: list[str],
     """
     v = validated.where(~F.col("valid")).select(
         *id_cols, F.explode("violations").alias("v"))
-    return v.select(
-        *id_cols,
+    return v.select(*_violation_row_cols(id_cols, span_field))
+
+
+def _violation_row_cols(ids: list[str], spans_col: str) -> list:
+    """Row projection of an exploded violation struct ``v``:
+    (id..., span_idx, keyword, json_pointer, message)."""
+    return [
+        *ids,
         F.nullif(
             F.regexp_extract(F.col("v.json_pointer"),
-                             f"^/{span_field}/(\\d+)", 1), F.lit("")
+                             f"^/{spans_col}/(\\d+)", 1), F.lit("")
         ).cast("int").alias("span_idx"),
         F.col("v.keyword").alias("keyword"),
         F.col("v.json_pointer").alias("json_pointer"),
         F.col("v.message").alias("message"),
-    )
+    ]
+
+
+def _lazy_validator(schema_json: Any, **kwargs):
+    """Getter of ``CompiledValidator(schema_json, **kwargs)``, built on the
+    first call: shipped in a pandas UDF's closure, it compiles once per
+    executor process, not once per batch."""
+    state: dict[str, CompiledValidator] = {}
+
+    def get() -> CompiledValidator:
+        if "v" not in state:
+            state["v"] = CompiledValidator(schema_json, **kwargs)
+        return state["v"]
+    return get
 
 
 def json_validator_udf(schema_json: Any, registry: Optional[dict[str, Any]] = None,
@@ -390,15 +385,9 @@ def json_validator_udf(schema_json: Any, registry: Optional[dict[str, Any]] = No
     reference recompiles nothing per value either — compile-once semantics,
     Harness/Harness.lean:15-16) and regexes are cached in its closure.
     """
-    state: dict[str, CompiledValidator] = {}
-
-    def _get() -> CompiledValidator:
-        if "v" not in state:
-            state["v"] = CompiledValidator(schema_json, uri=uri,
-                                           registry=registry, fuel=fuel,
-                                           message_style=message_style,
-                                           assert_formats=assert_formats)
-        return state["v"]
+    _get = _lazy_validator(schema_json, uri=uri, registry=registry,
+                           fuel=fuel, message_style=message_style,
+                           assert_formats=assert_formats)
 
     @pandas_udf(RESULT_SCHEMA)
     def _validate(batch: pd.Series) -> pd.DataFrame:
@@ -430,14 +419,8 @@ def json_verdict_udf(schema_json: Any, registry: Optional[dict[str, Any]] = None
     """Verdict-only pandas UDF: json string -> boolean. Short-circuits on the
     first failing keyword (reference Except-monad behavior) and skips
     violation-struct construction — ~2x the throughput of the full UDF."""
-    state: dict[str, CompiledValidator] = {}
-
-    def _get() -> CompiledValidator:
-        if "v" not in state:
-            state["v"] = CompiledValidator(schema_json, uri=uri,
-                                           registry=registry, fuel=fuel,
-                                           assert_formats=assert_formats)
-        return state["v"]
+    _get = _lazy_validator(schema_json, uri=uri, registry=registry,
+                           fuel=fuel, assert_formats=assert_formats)
 
     @pandas_udf("boolean")
     def _verdict(batch: pd.Series) -> pd.Series:
@@ -563,8 +546,13 @@ def validate_spans_best(df: DataFrame, schema_json: Any,
                         assert_formats: bool = False) -> DataFrame:
     """Best-available strategy chain for spans-shaped document tables:
     fused-array (codegen, zero shuffle) -> explode+agg (codegen, verdict
-    shuffle) -> forall projection (interpreted HOF, zero shuffle). All three
-    are verdict- and violation-equivalent (pytest-pinned).
+    shuffle) -> forall projection (interpreted HOF, zero shuffle) -> the
+    Arrow-batch interpreter. The columnar strategies are verdict- and
+    violation-equivalent (pytest-pinned) and decline with one signal,
+    CompileFallback (FusedUnsupported is a subclass), which moves the chain
+    to the next strategy; the interpreter takes what none of them can
+    express, so the chain is total. SchemaCycleError is not a decline and
+    stays loud.
 
     keep_cols=None means ALL input columns on every branch (normalized
     here; the explode strategy's own light-columns default applies only
@@ -574,49 +562,35 @@ def validate_spans_best(df: DataFrame, schema_json: Any,
     the other validators' contract."""
     if keep_cols is None:
         keep_cols = [c for c in df.columns if c not in ("valid", "violations")]
-    from ..plans.fused import FusedUnsupported, validate_documents_fused
-    try:
-        return validate_documents_fused(df, schema_json, spans_col=spans_col,
-                                        registry=registry, uri=uri,
-                                        keep_cols=keep_cols,
-                                        message_style=message_style,
-                                        assert_formats=assert_formats)
-    except FusedUnsupported:
-        pass
-    try:
-        return validate_documents_exploded(df, schema_json, spans_col=spans_col,
-                                           registry=registry, uri=uri,
-                                           keep_cols=keep_cols,
-                                           message_style=message_style,
-                                           assert_formats=assert_formats)
-    except CompileFallback:
+    opts = dict(registry=registry, uri=uri, message_style=message_style,
+                assert_formats=assert_formats)
+
+    def forall(df: DataFrame, schema_json: Any, **_spans) -> DataFrame:
+        return validate_dataframe(df, schema_json, **opts) \
+            .select(*keep_cols, "valid", "violations")
+
+    for strategy in (validate_documents_fused, validate_documents_exploded,
+                     forall):
         try:
-            out = validate_dataframe(df, schema_json, registry=registry,
-                                     uri=uri, message_style=message_style,
-                                     assert_formats=assert_formats)
+            return strategy(df, schema_json, spans_col=spans_col,
+                            keep_cols=keep_cols, **opts)
         except CompileFallback:
-            # TRUE last resort (VERDICT r4 #7): no columnar strategy can
-            # express this schema (format:'regex' / IDNA assertions, evil
-            # ref cycles, non-transpilable regexes) — serialize the row
-            # struct with to_json and run the Arrow-batch interpreter, the
-            # same stage validate_json_column falls back to. to_json omits
-            # NULL fields, which matches the columnar strategies'
-            # null-means-absent treatment of NULL parquet columns
-            # (equivalence pytest-pinned), and a NULL array element still
-            # serializes as JSON null. Slowest path by far, but it makes
-            # the spans chain TOTAL: every schema the interpreter accepts
-            # now validates over spans tables.
-            udf = json_validator_udf(schema_json, registry=registry,
-                                     uri=uri,
-                                     message_style=message_style,
-                                     assert_formats=assert_formats)
-            res = udf(F.to_json(F.struct(*[F.col(c) for c in df.columns])))
-            return df.select(
-                *keep_cols,
-                res.getField("valid").alias("valid"),
-                res.getField("violations").alias("violations"))
-        keep = keep_cols if keep_cols is not None else list(df.columns)
-        return out.select(*keep, "valid", "violations")
+            pass
+    # TRUE last resort (VERDICT r4 #7): no columnar strategy can express
+    # this schema (format:'regex' / IDNA assertions, evil ref cycles,
+    # non-transpilable regexes) — serialize the row struct with to_json
+    # and run the Arrow-batch interpreter, the same stage
+    # validate_json_column falls back to. to_json omits NULL fields, which
+    # matches the columnar strategies' null-means-absent treatment of NULL
+    # parquet columns (equivalence pytest-pinned), and a NULL array element
+    # still serializes as JSON null. Slowest path by far, but it makes the
+    # spans chain TOTAL: every schema the interpreter accepts validates
+    # over spans tables.
+    udf = json_validator_udf(schema_json, **opts)
+    res = udf(F.to_json(F.struct(*[F.col(c) for c in df.columns])))
+    return df.select(*keep_cols,
+                     res.getField("valid").alias("valid"),
+                     res.getField("violations").alias("violations"))
 
 
 def suite_validator_udf(fuel: int = DEFAULT_FUEL,
@@ -650,20 +624,3 @@ def suite_validator_udf(fuel: int = DEFAULT_FUEL,
         return pd.Series(out, dtype="boolean")
 
     return _run
-
-
-def validate_auto(df: DataFrame, schema_json: Any, doc_col: Optional[str] = None,
-                  registry: Optional[dict[str, Any]] = None, uri: str = "") -> DataFrame:
-    """Columnar when lowerable, Arrow fallback otherwise (route recorded in
-    the plan via a literal marker column)."""
-    try:
-        out = validate_dataframe(df, schema_json, doc_col=doc_col,
-                                 registry=registry, uri=uri)
-        return out.withColumn("_route", F.lit("columnar"))
-    except CompileFallback:
-        inst = F.to_json(F.struct(*[F.col(c) for c in df.columns])) \
-            if doc_col is None else F.to_json(F.col(doc_col))
-        tmp = df.withColumn("_json", inst)
-        out = validate_json_column(tmp, "_json", schema_json,
-                                   registry=registry, uri=uri)
-        return out.drop("_json").withColumn("_route", F.lit("arrow"))

@@ -27,9 +27,12 @@ general forall plan gated behind the fused verdict — Catalyst's conditional
 evaluation means only failing rows (rare at production quality rates) ever
 evaluate the interpreted collector. One scan, zero shuffle, full detail.
 
-Schemas outside the supported subset raise :class:`FusedUnsupported`; callers
-fall back to ``validate_documents_exploded`` (shuffle, full keyword coverage)
-or the forall plan.
+Schemas outside the supported subset raise :class:`FusedUnsupported`, a
+``CompileFallback``: the spans chain's one decline signal, on which
+``validate_spans_best`` tries the explode strategy (shuffle, full keyword
+coverage), the forall plan and, last, the Arrow-batch interpreter. The
+doc-level half (shape guards, the schema minus ``items``) is
+``operators.validation.split_doc_spans``, shared with those strategies.
 """
 
 from __future__ import annotations
@@ -41,7 +44,6 @@ from typing import Any, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
     StringType,
     StructType,
@@ -50,8 +52,10 @@ from pyspark.sql.types import (
 from ..compiler import (
     VIOLATION_SCHEMA,
     ColumnarCompiler,
+    CompileFallback,
     _FRACTIONAL,
     _INTEGRAL,
+    _let,
     _static_type_names,
 )
 from ..plan_cache import plan_memo
@@ -59,7 +63,7 @@ from ..resolver import resolve_uri
 from ..schema_ast import ABSENT, Schema, SchemaObject, parse_schema
 
 
-class FusedUnsupported(Exception):
+class FusedUnsupported(CompileFallback):
     """Schema/keyword outside the fused subset — use a general strategy."""
 
 
@@ -210,16 +214,6 @@ def _n_lines(joined: Column) -> Column:
     count('\\n') + 1."""
     return (F.length(joined)
             - F.length(F.replace(joined, F.lit("\n"), F.lit(""))) + 1)
-
-
-def _let(expr: Column, fn) -> Column:
-    """Let-binding inside an expression: evaluate `expr` ONCE, pass it to
-    `fn` as a lambda variable. Catalyst has no common-subexpression reuse
-    for interpreted expressions (and array_compact is rewritten to an
-    interpreted lambda filter), but a higher-order function evaluates its
-    array argument once and binds it as a real attribute (r6; same trick
-    as variant._let)."""
-    return F.get(F.transform(F.array(expr), fn), 0)
 
 
 def _joined_line_scaffold(field_arr: Column, fast_fn, slow_fn) -> Column:
@@ -416,56 +410,32 @@ def validate_documents_fused(
     """Full validation at fused speed: fused verdict + forall-plan violation
     detail evaluated ONLY on failing rows. Output schema matches
     ``validate_dataframe`` restricted to keep_cols (default: all columns).
-    Raises FusedUnsupported when the schema leaves the fused subset."""
-    parsed = parse_schema(schema_json)
-    if not isinstance(parsed, SchemaObject) or parsed.raw is None:
-        raise FusedUnsupported("fused plan needs an object schema")
-    props = dict((parsed.raw or {}).get("properties", {}))
-    span_prop = props.get(spans_col)
-    if span_prop is None or not isinstance(df.schema[spans_col].dataType, ArrayType):
-        raise FusedUnsupported("fused plan needs the array column")
-    items = span_prop.get("items")
-    if items is None or isinstance(items, list):
-        raise FusedUnsupported("fused plan needs Single-items semantics")
+    Raises FusedUnsupported when the schema leaves the fused subset, and
+    CompileFallback when the input is not spans-shaped or the doc level
+    does not lower."""
+    from ..operators.validation import split_doc_spans
 
     def build() -> dict:
-        comp = ColumnarCompiler(schema_json, uri=uri, registry=registry,
-                                message_style=message_style,
-                                assert_formats=assert_formats)
-
-        # doc-level plan = schema minus the items subschema (array-size
-        # keywords stay doc-level), lowered by the general compiler
-        doc_schema_json = dict(parsed.raw)
-        doc_props = dict(doc_schema_json.get("properties", {}))
-        span_prop_doc = dict(span_prop)
-        span_prop_doc.pop("items", None)
-        doc_props[spans_col] = span_prop_doc
-        doc_schema_json["properties"] = doc_props
-        dtype = StructType([f for f in df.schema.fields])
-        # lowered as a node of the root compiler: root-relative $refs resolve
-        doc_low = comp.lower_node(doc_schema_json, dtype, base_uri=uri)
-
-        items_ast = parse_schema(items)
-        root_base = comp.root_base_uri()
-        elem_t = df.schema[spans_col].dataType.elementType
-        spans_ok = fused_items_verdict(comp, items_ast, root_base,
+        comp, doc_valid, _, items, elem_t = split_doc_spans(
+            df, schema_json, spans_col, registry, uri, message_style,
+            assert_formats)
+        spans_ok = fused_items_verdict(comp, parse_schema(items),
+                                       comp.root_base_uri(),
                                        F.col(spans_col), elem_t)
         # null array = absent key: items checks pass (type-guard semantics)
         spans_ok = F.when(F.col(spans_col).isNull(), F.lit(True)) \
                     .otherwise(F.coalesce(spans_ok, F.lit(False)))
-
-        instance = F.struct(*[F.col(c) for c in df.columns])
-        doc_valid = F.coalesce(doc_low.valid(instance), F.lit(False))
         valid = doc_valid & F.coalesce(spans_ok, F.lit(False))
 
         cols = {"valid": valid}
         if with_violations:
             # full-detail collector from the general plan, evaluated lazily
             # only when the fused verdict fails
-            full_low = comp.lower(dtype)
+            instance = F.struct(*[F.col(c) for c in df.columns])
             cols["violations"] = \
                 F.when(valid, F.array().cast(VIOLATION_SCHEMA)) \
-                 .otherwise(full_low.violations(instance, F.lit("")))
+                 .otherwise(comp.lower(StructType(df.schema.fields))
+                            .violations(instance, F.lit("")))
         return cols
 
     # the built Columns are unresolved (name-bound): memoize per (schema,

@@ -70,7 +70,14 @@ def _pm(col, salt: int, mod: int):
 
 def spans_documents(spark: SparkSession, n_docs: int, seed: int = 42,
                     partitions: int | None = None) -> DataFrame:
-    """Build the documents_spans table: (doc_id string, spans array<struct>)."""
+    """Build the documents_spans table: (doc_id string, spans array<struct>).
+
+    The result has TWICE the partitions of its ``spark.range`` (``2 *
+    partitions`` when given): the re-emitted duplicate-``doc_id`` rows
+    (hash bucket 990+, about 1% of the documents) are unioned in as their
+    own partitions, one per range partition. Written as parquet,
+    ``partitions=8`` over 200k docs thus gives 8 files of 25k documents and
+    8 files of roughly 250 duplicate rows each."""
     rng = spark.range(0, n_docs, 1, partitions) if partitions else spark.range(n_docs)
     sid = F.col("id") + F.lit(seed * 1_000_003)
 

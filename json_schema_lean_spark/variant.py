@@ -68,10 +68,16 @@ from .compiler import (
     _LOWERED_TRUE,
     _cjson,
     _concat_viols,
+    _cond_viol,
+    _cond_viol_col,
+    _guard,
+    _let,
+    _ptr_key,
     _viol,
     _viol_col,
 )
 from .plan_cache import plan_memo
+from .pointer import escape_token
 from .resolver import DEFAULT_URI, Resolver, find_ref_cycle, resolve_uri
 from .schema_ast import ABSENT, Schema, SchemaObject, parse_schema
 
@@ -89,16 +95,6 @@ MAX_CANON_DEPTH = 24
 NODE_BUDGET = 30_000
 
 _NUM_TYPES = ("BIGINT", "INT", "SMALLINT", "TINYINT", "DOUBLE", "FLOAT")
-
-
-def _guard(v: Column, pred: Column) -> Column:
-    """Absent (SQL NULL) passes every keyword; force definite booleans."""
-    return F.when(v.isNull(), F.lit(True)).otherwise(F.coalesce(pred, F.lit(False)))
-
-
-def _cond_viol(v: Column, ok: Column, keyword: str, ptr: Column, msg: str) -> Column:
-    return F.when(_guard(v, ok), F.array().cast(VIOLATION_SCHEMA)) \
-            .otherwise(F.array(_viol(keyword, ptr, msg)))
 
 
 def _ts(v: Column) -> Column:
@@ -144,15 +140,6 @@ def _varr(v: Column) -> Column:
     return F.try_variant_get(v, "$", "array<variant>")
 
 
-def _ptr_token(name: str) -> str:
-    return name.replace("~", "~0").replace("/", "~1")
-
-
-def _ptr_key(key: Column) -> Column:
-    """RFC 6901 token escaping for a runtime key Column (~ -> ~0, / -> ~1)."""
-    return F.regexp_replace(F.regexp_replace(key, "~", "~0"), "/", "~1")
-
-
 _SIMPLE_KEY = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 #: keys safe inside a quoted bracket path: no quotes/backslashes/control
 #: chars and no brackets (the variant path grammar's treatment of nested
@@ -178,14 +165,6 @@ def _child(v: Column, name: str) -> Column:
 # ---------------------------------------------------------------------------
 # Deep equality via canonical strings (uniqueItems / const / enum)
 # ---------------------------------------------------------------------------
-
-def _let(expr: Column, fn: Callable[[Column], Column]) -> Column:
-    """Let-binding inside an expression: evaluate `expr` ONCE, pass it to
-    `fn` as a lambda variable. Catalyst has no common-subexpression reuse
-    for interpreted projections, but a higher-order function evaluates its
-    array argument once and binds elements as real attributes."""
-    return F.get(F.transform(F.array(expr), fn), 0)
-
 
 def _entry_key_cmp(a: Column, b: Column) -> Column:
     # compare map entries by key only — variant values are not orderable
@@ -510,8 +489,7 @@ class VariantCompiler:
             if self.message_style == "reference" and ref is not None:
                 add(lambda v, ok=ok_fn: _guard(v, ok(v)),
                     lambda v, p, ok=ok_fn, kw=keyword, r=ref:
-                    F.when(_guard(v, ok(v)), F.array().cast(VIOLATION_SCHEMA))
-                     .otherwise(F.array(_viol_col(kw, p, r(v)))))
+                    _cond_viol_col(v, ok(v), kw, p, r(v)))
             else:
                 add(lambda v, ok=ok_fn: _guard(v, ok(v)),
                     lambda v, p, ok=ok_fn, kw=keyword, m=msg:
@@ -734,7 +712,7 @@ class VariantCompiler:
         if s.properties:
             for name, sub in s.properties:
                 low = self._lower(sub, base_uri, chain)
-                tok = _ptr_token(name)
+                tok = escape_token(name)
 
                 # child is SQL NULL iff absent (or non-object) — the
                 # absent-passes guard needs no separate is_obj test

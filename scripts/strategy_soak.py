@@ -1,21 +1,30 @@
 """Cross-strategy soak: random span-document schemas x random documents;
-forall / explode / fused strategies must all reproduce the interpreter's
-verdicts. Run ad hoc (~7 min at 150 examples): python scripts/strategy_soak.py
-Round-1 result: 150/150 examples agree (115 eligible for the fused subset).
+forall / explode / fused strategies and the validate_spans_best chain must
+all reproduce the interpreter's verdicts. Run ad hoc from any directory:
+
+    python scripts/strategy_soak.py [max_examples]   # default 150
+
+Prints one JSON line: examples_chain (validate_spans_best checked: every
+example), examples_2paths (forall and explode both compiled) and
+examples_all3 (the fused subset too).
 """
-import json, sys
-sys.path.insert(0, "/root/repo")
+import json, os, sys
+from pathlib import Path
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from hypothesis import settings, HealthCheck, given, strategies as st
 from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[8]")
+spark = (SparkSession.builder
+         .master(f"local[{len(os.sched_getaffinity(0))}]")
          .config("spark.sql.shuffle.partitions","8")
          .config("spark.ui.enabled","false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 from json_schema_lean_spark.interpreter import CompiledValidator
 from json_schema_lean_spark.operators.validation import (
-    validate_dataframe, validate_documents_exploded)
-from json_schema_lean_spark.plans import FusedUnsupported, validate_documents_fused
+    validate_dataframe, validate_documents_exploded, validate_spans_best)
+from json_schema_lean_spark.plans import validate_documents_fused
 from json_schema_lean_spark.compiler import CompileFallback
+
+MAX_EXAMPLES = int(sys.argv[1]) if len(sys.argv) > 1 else 150
 
 DDL = ("doc_id string, spans array<struct<kind:string,text:string,"
        "media_ref:string,offset:int>>")
@@ -72,8 +81,9 @@ def to_json_doc(doc_id, spans):
                         for s in spans]
     return doc
 
-checked = [0, 0]
-@settings(max_examples=150, deadline=None, suppress_health_check=list(HealthCheck))
+checked = {"examples_all3": 0, "examples_2paths": 0, "examples_chain": 0}
+@settings(max_examples=MAX_EXAMPLES, deadline=None,
+          suppress_health_check=list(HealthCheck))
 @given(schema=schema_gen(), data=spans_gen())
 def run(schema, data):
     ref = CompiledValidator(schema)
@@ -84,6 +94,10 @@ def run(schema, data):
         expected[key] = ref.is_valid(to_json_doc(key, spans))
         rows.append((key, spans))
     df = spark.createDataFrame(rows, DDL)
+    best = {r["doc_id"]: r["valid"]
+            for r in validate_spans_best(df, schema).collect()}
+    assert best == expected, ("chain", schema, data, best, expected)
+    checked["examples_chain"] += 1
     try:
         a = {r["doc_id"]: r["valid"] for r in validate_dataframe(df, schema).collect()}
     except CompileFallback:
@@ -92,14 +106,14 @@ def run(schema, data):
     b = {r["doc_id"]: r["valid"]
          for r in validate_documents_exploded(df, schema).collect()}
     assert b == expected, ("exploded", schema, data, b, expected)
-    checked[0] += 1
+    checked["examples_2paths"] += 1
     try:
         c = {r["doc_id"]: r["valid"]
              for r in validate_documents_fused(df, schema, keep_cols=["doc_id"]).collect()}
-        assert c == expected, ("fused", schema, data, c, expected)
-        checked[1] += 1
-    except FusedUnsupported:
-        pass
+    except CompileFallback:  # FusedUnsupported included
+        return
+    assert c == expected, ("fused", schema, data, c, expected)
+    checked["examples_all3"] += 1
 
 run()
-print(json.dumps({"examples_all3": checked[1], "examples_2paths": checked[0]}))
+print(json.dumps({"max_examples": MAX_EXAMPLES, **checked}))

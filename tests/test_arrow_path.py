@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from json_schema_lean_spark.operators.validation import (
     suite_validator_udf,
-    validate_auto,
     validate_json_column,
 )
 
@@ -59,19 +58,3 @@ def test_events_props_json_validation(spark):
     for r in sample:
         k = json.loads(r["props"])["k"]
         assert r["valid"] == (isinstance(k, int) and k >= 1), r
-
-
-def test_validate_auto_falls_back(spark):
-    df = spark.createDataFrame([("abc",), ("zzz",)], "s: string")
-    schema = {"properties": {"s": {"pattern": "(?P<g>a)"}}}  # Python-only regex
-    out = validate_auto(df, schema)
-    rows = {r["s"]: (r["valid"], r["_route"]) for r in out.collect()}
-    assert rows["abc"] == (True, "arrow")
-    assert rows["zzz"] == (False, "arrow")
-
-
-def test_validate_auto_prefers_columnar(spark):
-    df = spark.createDataFrame([(1,), (-1,)], "n: long")
-    out = validate_auto(df, {"properties": {"n": {"minimum": 0}}})
-    rows = {r["n"]: (r["valid"], r["_route"]) for r in out.collect()}
-    assert rows == {1: (True, "columnar"), -1: (False, "columnar")}

@@ -351,3 +351,68 @@ def test_struct_dynamic_object_violations_per_key(spark):
     assert got == exp
     assert ("propertyNames", "") in got
     assert ("false", "/zz") in got and ("false", "/toolong") in got
+
+
+def _span_schema_with_doc_id(**extra):
+    import copy
+    schema = copy.deepcopy(SPAN_SCHEMA)
+    schema["properties"]["doc_id"].update(extra)
+    return schema
+
+
+#: doc-level keywords no columnar strategy lowers: the fused plan declines
+#: in its shared doc-level half, not in its items translator
+_DOC_LEVEL_DECLINES = {
+    # Python-only regex class: not Java-safe, so the compiler declines
+    "python_regex": _span_schema_with_doc_id(pattern=r"^doc-\w"),
+    # a $ref <-> $ref cycle under anyOf: no cycle error, but inlining
+    # exceeds its depth bound
+    "ref_cycle": {
+        **_span_schema_with_doc_id(
+            anyOf=[{"type": "string"}, {"$ref": "#/definitions/a"}]),
+        "definitions": {**SPAN_SCHEMA["definitions"],
+                        "a": {"$ref": "#/definitions/b"},
+                        "b": {"$ref": "#/definitions/a"}},
+    },
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DOC_LEVEL_DECLINES))
+def test_spans_chain_total_when_doc_level_declines(spark, tmp_path, case):
+    """Every strategy of the spans chain declines with CompileFallback, so
+    validate_spans_best, violation_rows_best and a checkpointed run all
+    reach the interpreter instead of raising."""
+    from json_schema_lean_spark.checkpointing import CheckpointedValidation
+    from json_schema_lean_spark.operators.validation import (
+        validate_spans_best,
+        violation_rows_best,
+    )
+
+    schema = _DOC_LEVEL_DECLINES[case]
+    path = str(tmp_path / "spans")
+    spans_documents(spark, 200).write.parquet(path)
+    docs = spark.read.parquet(path)
+    ref = CompiledValidator(schema)
+
+    got, want = [], []
+    for row in validate_spans_best(docs, schema).collect():
+        doc = row_to_json(row)
+        del doc["valid"], doc["violations"]
+        want.append((row["doc_id"], ref.is_valid(doc), tuple(sorted(
+            (v.keyword, v.json_pointer) for v in ref.validate(doc)))))
+        got.append((row["doc_id"], row["valid"], tuple(sorted(
+            (v["keyword"], v["json_pointer"]) for v in row["violations"]))))
+    assert sorted(got) == sorted(want)
+    n_valid = sum(1 for _d, ok, _v in want if ok)
+    assert 0 < n_valid < len(want)
+
+    rows = sorted(map(tuple, violation_rows_best(
+        docs, schema, id_cols=["doc_id"]).collect()))
+    assert rows == sorted(map(tuple, violation_rows(
+        validate_spans_best(docs, schema), ["doc_id"]).collect()))
+    assert rows
+
+    report = CheckpointedValidation(spark, path, schema,
+                                    str(tmp_path / "out")).run()
+    assert report.units_processed == report.units_total == 1
+    assert (report.rows, report.valid) == (len(want), n_valid)
