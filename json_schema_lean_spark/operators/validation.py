@@ -30,7 +30,7 @@ from pyspark.sql.types import ArrayType, StructType
 
 from ..compiler import VIOLATION_SCHEMA, ColumnarCompiler, CompileFallback
 from ..interpreter import DEFAULT_FUEL, CompiledValidator
-from ..plan_cache import plan_memo
+from ..plan_cache import no_call_site_capture, plan_memo
 from ..plans.fused import validate_documents_fused
 from ..schema_ast import SchemaObject, parse_schema
 
@@ -57,26 +57,34 @@ def validate_dataframe(
     message_style="reference" emits byte-parity Lean reportError strings
     (lean_messages.py) with the offending value compressed in at runtime.
     """
-    comp = ColumnarCompiler(schema_json, uri=uri, registry=registry,
-                            message_style=message_style,
-                            assert_formats=assert_formats)
-    if doc_col is None:
-        instance = F.struct(*[F.col(c) for c in df.columns])
-        dtype = StructType([f for f in df.schema.fields])
-    else:
-        instance = F.col(doc_col)
-        dtype = df.schema[doc_col].dataType
-    low = comp.lower(dtype)
-    valid = low.valid(instance)
-    # violations are gated behind the cheap fused verdict: Catalyst's
-    # conditional evaluation skips the (much larger) collector expression for
-    # every passing row — at 100 TB virtually all rows are valid and pay only
-    # the boolean predicate.
-    return df.withColumns({
-        "valid": valid,
-        "violations": F.when(valid, F.array().cast(VIOLATION_SCHEMA))
-                       .otherwise(low.violations(instance, F.lit(""))),
-    })
+    def build() -> dict:
+        comp = ColumnarCompiler(schema_json, uri=uri, registry=registry,
+                                message_style=message_style,
+                                assert_formats=assert_formats)
+        if doc_col is None:
+            instance = F.struct(*[F.col(c) for c in df.columns])
+            dtype = StructType([f for f in df.schema.fields])
+        else:
+            instance = F.col(doc_col)
+            dtype = df.schema[doc_col].dataType
+        low = comp.lower(dtype)
+        valid = low.valid(instance)
+        # violations are gated behind the cheap fused verdict: Catalyst's
+        # conditional evaluation skips the (much larger) collector expression
+        # for every passing row — at 100 TB virtually all rows are valid and
+        # pay only the boolean predicate.
+        return {
+            "valid": valid,
+            "violations": F.when(valid, F.array().cast(VIOLATION_SCHEMA))
+                           .otherwise(low.violations(instance, F.lit(""))),
+        }
+
+    # unresolved name-bound Columns: memoized per (schema, dtype, options),
+    # so the forall strategy and streaming micro-batches skip the py4j
+    # expression rebuild (plan_cache docstring)
+    return df.withColumns(plan_memo(
+        "dataframe", df, schema_json, registry,
+        (doc_col, uri, message_style, assert_formats), build))
 
 
 def split_doc_spans(df: DataFrame, schema_json: Any, spans_col: str,
@@ -284,6 +292,7 @@ def violation_rows_fast(
     return flat.select(*_violation_row_cols(ids, spans_col))
 
 
+@no_call_site_capture()
 def violation_rows_best(
     df: DataFrame,
     schema_json: Any,
@@ -440,6 +449,7 @@ def json_verdict_udf(schema_json: Any, registry: Optional[dict[str, Any]] = None
     return _verdict
 
 
+@no_call_site_capture()
 def validate_json_column(df: DataFrame, json_col: str, schema_json: Any,
                          registry: Optional[dict[str, Any]] = None,
                          uri: str = "", fuel: int = DEFAULT_FUEL,
@@ -537,6 +547,7 @@ def warm_validation_codegen(df: DataFrame, schema_json: Any,
     return round(_time.perf_counter() - t0, 3)
 
 
+@no_call_site_capture()
 def validate_spans_best(df: DataFrame, schema_json: Any,
                         spans_col: str = "spans",
                         registry: Optional[dict[str, Any]] = None,

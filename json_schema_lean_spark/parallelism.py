@@ -27,8 +27,15 @@ from pyspark.sql import DataFrame
 def scale_partitions(df: DataFrame, factor: int = 1) -> DataFrame:
     """Round-robin repartition ``df`` up to ``defaultParallelism * factor``
     partitions when its planned scan has fewer — a no-op for streaming
-    inputs, for already-parallel inputs (the 100 TB case), and when the
-    partition count cannot be determined.
+    inputs, for already-parallel inputs (the 100 TB case), for inputs whose
+    physical plan holds an exchange or a subquery, and when the partition
+    count cannot be determined.
+
+    Launches no Spark job: the count is read from the RDD of the JVM's
+    physical plan, which is built, not run. A plan with an exchange or a
+    subquery could run its map stages (AQE), broadcasts or subqueries to
+    answer, so it is returned unchanged; its exchange already sets the
+    width of what runs after it.
 
     The repartition only redistributes rows; every downstream operator in
     this package is row-order-insensitive (verdicts are per-row, aggregates
@@ -36,10 +43,31 @@ def scale_partitions(df: DataFrame, factor: int = 1) -> DataFrame:
     if df.isStreaming:
         return df
     try:
-        n = df.rdd.getNumPartitions()
+        qe = df._jdf.queryExecution()
+        if _needs_a_job(qe.executedPlan()):
+            return df
+        n = qe.toRdd().getNumPartitions()
         target = df.sparkSession.sparkContext.defaultParallelism * factor
     except Exception:  # non-materializable plan (e.g. analysis-only stubs)
         return df
     if 0 < n < target:
         return df.repartition(target)
     return df
+
+
+def _needs_a_job(plan) -> bool:
+    """True when building ``plan``'s RDD would run a job: the plan, or the
+    plan of a cache it reads, holds an exchange (AQE wraps such plans in
+    ``AdaptiveSparkPlanExec``) or a subquery."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if (name == "AdaptiveSparkPlanExec" or "Exchange" in name
+                or not node.subqueries().isEmpty()):
+            return True
+        if name == "InMemoryTableScanExec":  # a cache builds from its plan
+            stack.append(node.relation().cachedPlan())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
