@@ -83,9 +83,7 @@ def _resolve_once(comp: ColumnarCompiler, schema: Schema, base_uri: str,
     while isinstance(schema, SchemaObject) and schema.ref is not None:
         if depth > 64:
             raise FusedUnsupported("ref chain too deep")
-        target = resolve_uri(base_uri, schema.ref)
-        root, subpath = comp.resolver.resolve_path(target)
-        got = comp.resolver.get_schema_and_uri(root, subpath)
+        target, _root, _subpath, got = comp.ref_step(schema.ref, base_uri)
         if got is None:
             raise FusedUnsupported(f"unresolvable ref {target!r}")
         schema, base_uri = got

@@ -26,7 +26,7 @@ construct          Python ``re`` (str)         Java ``Pattern`` (default)
 
 :func:`to_java_regex` walks the pattern once and returns a Java pattern with
 IDENTICAL match semantics (rewriting ``.`` -> ``[^\\n]``, ``$`` ->
-``(?=\\n?\\z)``, ``\\d`` -> ``\\p{Nd}``, ``\\Z`` -> ``\\z``, ``{,n}`` ->
+``(?=\\n?\\z)``, ``\\d`` -> explicit code-point ranges, ``\\Z`` -> ``\\z``, ``{,n}`` ->
 ``{0,n}``, escaping ``[``/``&&`` inside classes, …) or ``None`` when exact
 transpilation isn't known-safe (``\\w \\s \\b \\B \\N{}``, embedded flags,
 named groups, conditionals, octal escapes) — those patterns route to the
@@ -37,6 +37,7 @@ through a real Spark ``regexp_like``.
 
 from __future__ import annotations
 
+import functools
 import re
 from typing import Optional
 
@@ -50,6 +51,24 @@ _VERBATIM_LETTER_ESCAPES = set("nrtfAxu")  # \n \r \t \f \A \xHH \uHHHH
 
 #: escapes with no exact Java equivalent -> Arrow fallback
 _REJECT_ESCAPES = set("wWsSbBNLaC")  # \b is contextual (see class handling)
+
+
+@functools.cache
+def _digit_ranges() -> str:
+    """Python's ``\\d`` as Java class ranges, taken from ``re`` itself: the
+    JVM's ``\\p{Nd}`` follows its own Unicode version (OpenJDK 17 lacks
+    the Tangsa digits U+16AC0-U+16AC9 that Python 3.11's ``\\d`` has)."""
+    every = "".join(map(chr, range(0x110000)))
+    return "".join("\\x{%x}-\\x{%x}" % (ord(m.group()[0]), ord(m.group()[-1]))
+                   for m in re.finditer(r"\d+", every))
+
+
+def _digit_class(negated: bool, in_class: bool) -> str:
+    """``\\d`` / ``\\D``; inside a class ``\\d`` joins the enclosing class
+    and ``\\D`` becomes a nested negated class (a union in Java)."""
+    if in_class and not negated:
+        return _digit_ranges()
+    return ("[^%s]" if negated else "[%s]") % _digit_ranges()
 
 
 def to_java_regex(pattern: str) -> Optional[str]:
@@ -74,12 +93,8 @@ def to_java_regex(pattern: str) -> Optional[str]:
             if i + 1 >= n:
                 return None
             e = pattern[i + 1]
-            if e == "d":
-                out.append("\\p{Nd}")          # Python \d == Unicode Nd
-                i += 2
-                continue
-            if e == "D":
-                out.append("\\P{Nd}")
+            if e in "dD":
+                out.append(_digit_class(e == "D", in_class))
                 i += 2
                 continue
             if e == "Z":

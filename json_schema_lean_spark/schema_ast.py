@@ -317,11 +317,6 @@ def _parse_dependencies(j: dict) -> Optional[list[tuple[str, Dependency]]]:
     return out or None
 
 
-def compile_schema(j: Any) -> Schema:
-    """Public alias (parity: JsonSchema/Compiler.lean:9 ``compile``)."""
-    return parse_schema(j)
-
-
 def schema_to_json(s: Schema) -> Any:
     """Inverse serializer: compiled AST -> plain JSON value (parity:
     ``schemaToJson``, /root/reference/JsonSchema/Schema.lean:128-188 — the

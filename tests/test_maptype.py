@@ -92,3 +92,34 @@ def test_map_dynamic_object_violations_per_key(spark):
     assert ("minimum", "/xq") in got          # patternProperties recursion
     assert ("enum", "/zzz") in got            # additionalProperties recursion
     assert ("propertyNames", "") in got       # per-name at the object ptr
+
+
+def test_map_reference_messages_match_interpreter(spark):
+    """Reference-style messages of the object keywords over a MapType
+    column byte-match the interpreter's (they used to keep the structured
+    text, e.g. "missing one of ['a', 'z']")."""
+    from json_schema_lean_spark.interpreter import CompiledValidator
+    from json_schema_lean_spark.operators.validation import validate_dataframe
+
+    schema = {
+        "required": ["a", "z"],
+        "maxProperties": 2,
+        "minProperties": 1,
+        "propertyNames": {"maxLength": 2},
+        "dependencies": {"b": ["a", "c"]},
+    }
+    docs = [{"b": 1, "long": 2, "d": 3}, {}, {"a": 1, "z": 2}]
+    df = spark.createDataFrame([(d,) for d in docs], "m map<string,int>")
+    out = validate_dataframe(df, schema, doc_col="m",
+                             message_style="reference").collect()
+    ref = CompiledValidator(schema, message_style="reference")
+    fired = set()
+    for doc, row in zip(docs, out):
+        exp = sorted((x.keyword, x.json_pointer, x.message)
+                     for x in ref.validate(doc))
+        got = sorted((x["keyword"], x["json_pointer"], x["message"])
+                     for x in row["violations"])
+        assert got == exp, doc
+        fired |= {k for k, _, _ in got}
+    assert fired == {"required", "maxProperties", "minProperties",
+                     "propertyNames", "dependencies"}

@@ -6,6 +6,7 @@ Spark's regexp_like. Patterns it rejects route to the Arrow interpreter
 needs proof.
 """
 
+import json
 import random
 import re
 
@@ -120,7 +121,7 @@ def test_fuzz_accepted_patterns_match_python(spark):
 
     alphabet = ["a", "b", "c", "f", "x", "é", "٣", "7", "\n", "\r", " ",
                 "\U0001F4A9", ".", "[", "]", "&", "{", "}", "\x85",
-                "\u2028", "$", "~", "-", "\x0b", "\x08"]
+                "\u2028", "$", "~", "-", "\x0b", "\x08", "\U00016AC3"]
 
     def gen_string():
         return "".join(rng.choice(alphabet)
@@ -143,3 +144,23 @@ def test_fuzz_accepted_patterns_match_python(spark):
     bad = [(pairs[i][0], repr(pairs[i][1]), expected[i], got[i])
            for i in range(len(pairs)) if got[i] != expected[i]]
     assert not bad, bad[:20]
+
+
+def test_unicode_digits_on_both_compiled_paths(spark):
+    r"""``\d`` is Python's digit set on the VARIANT and columnar paths,
+    including the Tangsa digits U+16AC0-U+16AC9 that the JVM's ``\p{Nd}``
+    (OpenJDK 17) lacks; ``\D`` and class forms follow."""
+    from json_schema_lean_spark.interpreter import CompiledValidator
+    from json_schema_lean_spark.operators.validation import validate_dataframe
+    from json_schema_lean_spark.variant import validate_json_column_variant
+
+    strings = [chr(0x16AC0 + i) for i in range(10)] + ["7", "٣", "x", "\U0001F4A9"]
+    df = spark.createDataFrame([(s, json.dumps(s)) for s in strings],
+                               "s string, j string")
+    for pat in [r"^\d$", r"^\D$", r"^[x\d]$", r"^[^\D]$", r"^[x\D]$"]:
+        schema = {"pattern": pat}
+        exp = [CompiledValidator(schema).is_valid(s) for s in strings]
+        variant = validate_json_column_variant(df, "j", schema).collect()
+        columnar = validate_dataframe(df, schema, doc_col="s").collect()
+        assert [r["valid"] for r in variant] == exp, pat
+        assert [r["valid"] for r in columnar] == exp, pat

@@ -644,3 +644,41 @@ def test_deep_ref_behavior_invalid_keeps_batch_alive(spark):
     # default stays the loud error
     with pytest.raises(Exception, match="prefer_variant=False"):
         validate_json_column_variant(df, "j", schema).collect()
+
+
+CANON_VALUES = [
+    0, -0.0, 0.1, 1e20, 1e-7, 2 ** 53 + 1, 10 ** 30, 1.5e300, 7, -3,
+    True, False, None, "", "a", "é", "\U0001F4A9x", "\U00016AC0",
+    [], {}, [1, [2.5, ["x", None]]], {"b": 1, "a": [None, {"é": "\U0001F4A9"}]},
+    {"": [True], "a:b": {"x": -0.0}}, [[[[]]]],
+]
+
+
+def test_canon_literal_matches_spark_canon(spark):
+    """The Python canonical string of a const/enum literal equals the one
+    Spark's ``_canon`` computes over the parsed literal: the two sides of a
+    deep-equality check must agree byte for byte."""
+    from json_schema_lean_spark.variant import _canon, _canon_text, _py_depth
+    cols = [_canon(F.try_parse_json(F.lit(json.dumps(v))), _py_depth(v))
+            .alias(f"c{i}") for i, v in enumerate(CANON_VALUES)]
+    [row] = spark.range(1).select(*cols).collect()
+    got = [row[f"c{i}"] for i in range(len(CANON_VALUES))]
+    assert got == [_canon_text(v) for v in CANON_VALUES]
+
+
+def test_deep_literal_build_launches_no_job(spark):
+    """Folding a nested const/enum literal into the plan runs no Spark job
+    (the literal's canon is built in Python)."""
+    from test_parallelism import _jobs_during
+
+    from json_schema_lean_spark.variant import _CANON_LIT_CACHE
+    schema = {"anyOf": [{"const": {"k": [1, 2.5, {"z": None}]}},
+                        {"enum": [[1, "x"], {"n": -0.0}]}]}
+    _CANON_LIT_CACHE.clear()
+    docs = [{"k": [1.0, 2.5, {"z": None}]}, [1, "x"], {"n": 0}, {"k": [1]}]
+    df = spark.createDataFrame([(json.dumps(d),) for d in docs], "j string")
+    n, out = _jobs_during(spark, lambda: validate_json_column_variant(
+        df, "j", schema))
+    assert n == 0
+    ref = CompiledValidator(schema)
+    assert [r["valid"] for r in out.collect()] == [ref.is_valid(d) for d in docs]
