@@ -67,6 +67,21 @@ def _default_keep(schema: StructType, spans_col: str) -> list[str]:
     return [next((n for n in names if n != spans_col), names[0])]
 
 
+def _sum_metrics(per_unit) -> dict:
+    """Numeric Observation metrics of several units folded into one dict:
+    summed, except ``max_*`` keys, which take a max of maxes. Entries may
+    be None (a unit without metrics)."""
+    total: dict = {}
+    for metrics in per_unit:
+        for k, v in (metrics or {}).items():
+            if isinstance(v, (int, float)) and not isinstance(v, bool):
+                if k.startswith("max_"):
+                    total[k] = max(total.get(k, v), v)
+                else:
+                    total[k] = total.get(k, 0) + v
+    return total
+
+
 def plan_units(files: list[str], files_per_unit: int = 32) -> list[tuple[str, list[str]]]:
     units = []
     for i in range(0, len(files), files_per_unit):
@@ -179,13 +194,12 @@ class CheckpointedValidation:
 
     # -- run -----------------------------------------------------------------
 
-    def run(self, max_units: Optional[int] = None,
-            concurrent_units: Optional[int] = None) -> RunReport:
+    def run(self, max_units: Optional[int] = None) -> RunReport:
         """Process unfinished units (up to max_units — used to simulate a
         kill). Each unit is one distributed Spark job over its file group;
-        ``concurrent_units`` (default: constructor value) > 1 overlaps
-        that many units as simultaneous jobs. When units are pending, the
-        run first reads the footers of ALL input files once, merged into one
+        the constructor's ``concurrent_units`` > 1 overlaps that many units
+        as simultaneous jobs. When units are pending, the run first reads
+        the footers of ALL input files once, merged into one
         schema (one Spark job), so those footers must be mergeable: a column
         whose type differs between two files fails the run before any unit
         runs. keep_cols=None keeps the first column other than spans_col."""
@@ -214,9 +228,7 @@ class CheckpointedValidation:
         if self.warm_start:
             warmup_sec = self._warm_up(self.spark.read.schema(schema).parquet(
                 min(files, key=os.path.getsize)), keep)
-        conc = (concurrent_units if concurrent_units is not None
-                else self.concurrent_units)
-        if conc <= 1 or len(todo) <= 1:
+        if self.concurrent_units <= 1 or len(todo) <= 1:
             entries = [self._process_unit(*t, schema, keep) for t in todo]
         else:
             # driver threads submit units as overlapping Spark jobs: the
@@ -235,24 +247,16 @@ class CheckpointedValidation:
             # concurrency 3 while running fine sequentially (16g is
             # comfortable; on a cluster this is executor memory).
             from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=conc) as pool:
+            with ThreadPoolExecutor(max_workers=self.concurrent_units) as pool:
                 entries = list(pool.map(
                     lambda t: self._process_unit(*t, schema, keep), todo))
         rows = valid = viols = 0
-        observed: dict = {}
         for entry in entries:
             rows += entry["rows_scanned"]
             if entry["valid_rows"] is not None:
                 valid += entry["valid_rows"]
                 viols += entry["violations"]
-            if entry["observed_metrics"]:
-                for k, v in entry["observed_metrics"].items():
-                    if isinstance(v, (int, float)) \
-                            and not isinstance(v, bool):
-                        if k.startswith("max_"):
-                            observed[k] = max(observed.get(k, v), v)
-                        else:
-                            observed[k] = observed.get(k, 0) + v
+        observed = _sum_metrics(e["observed_metrics"] for e in entries)
         return RunReport(self.run_id, len(units), skipped, len(entries),
                          rows, valid, viols, observed or None,
                          warmup_sec)
@@ -291,8 +295,7 @@ class CheckpointedValidation:
         if self.unit_fn is not None:
             out, obs = self.unit_fn(self.spark, df)
         else:
-            # strategy chain (fused zero-shuffle first; r3 — was pinned
-            # to the explode strategy)
+            # strategy chain (fused zero-shuffle first)
             out = validate_spans_best(
                 df, self.schema_json, spans_col=self.spans_col,
                 keep_cols=keep)
@@ -403,12 +406,5 @@ class CheckpointedValidation:
         the whole-run no-silent-caps accounting (e.g. total
         dropped_candidate_pairs), correct across kill/resume because each
         unit's metrics were committed with its manifest entry."""
-        total: dict = {}
-        for entry in self.manifest():
-            for k, v in (entry.get("observed_metrics") or {}).items():
-                if isinstance(v, (int, float)) and not isinstance(v, bool):
-                    if k.startswith("max_"):  # a max of maxes, not a sum
-                        total[k] = max(total.get(k, v), v)
-                    else:
-                        total[k] = total.get(k, 0) + v
-        return total
+        return _sum_metrics(e.get("observed_metrics")
+                            for e in self.manifest())

@@ -1228,8 +1228,8 @@ class ColumnarCompiler(KeywordWalk):
         """Lower an arbitrary schema NODE (raw JSON or parsed Schema) with
         THIS compiler's full resolver context: root-relative $refs (e.g.
         '#/properties/spans/items') resolve against the registered root
-        schema, exactly as on the interpreter path. Used by the explode /
-        violation-row strategies to compile items/doc subplans without a
+        schema, exactly as on the interpreter path. Used by the fused /
+        violation-row plans to compile items/doc subplans without a
         lossy synthetic root (ADVICE r1)."""
         node = schema if isinstance(schema, (bool, SchemaObject)) \
             else parse_schema(schema)

@@ -90,7 +90,7 @@ def validate_dataframe(
 def split_doc_spans(df: DataFrame, schema_json: Any, spans_col: str,
                     registry: Optional[dict[str, Any]], uri: str,
                     message_style: str, assert_formats: bool) -> tuple:
-    """The front half every spans strategy shares (fused, explode and
+    """The front half the spans plans share (the fused verdict and
     violation rows). Returns ``(comp, doc_valid, doc_viols, items,
     elem_dtype)``: the root compiler; the verdict of the schema minus the
     spans' ``items`` (NULL counts as failing); a thunk building that
@@ -153,89 +153,6 @@ def span_checks(comp: ColumnarCompiler, items: Any, elem_dtype: Any,
     return span_valid, span_viols
 
 
-def validate_documents_exploded(
-    df: DataFrame,
-    schema_json: Any,
-    spans_col: str = "spans",
-    registry: Optional[dict[str, Any]] = None,
-    uri: str = "",
-    keep_cols: Optional[list[str]] = None,
-    message_style: str = "structured",
-    assert_formats: bool = False,
-) -> DataFrame:
-    """Explode-strategy validation for the north_rule input shape
-    (scalar doc columns + ONE array<struct> column with Single-items
-    semantics). Output schema matches ``validate_dataframe``.
-
-    Why a second strategy: lambda higher-order functions (forall/transform)
-    are NOT whole-stage-codegen'd in Spark — they evaluate interpreted per
-    element. posexplode + flat predicates keep the heavy per-span keyword
-    work inside codegen, then re-aggregate verdicts per row. Measured 6-10x
-    faster than the forall plan at sf0.1 (629k vs 60k docs/s warm). The
-    shuffle moves only (row-key, verdict, violations) — a tiny fraction of
-    input bytes at 100 TB — with map-side partial aggregation; AQE coalesces
-    and splits skewed reducers.
-    """
-    def build() -> tuple:
-        comp, doc_valid, doc_viols, items, elem_t = split_doc_spans(
-            df, schema_json, spans_col, registry, uri, message_style,
-            assert_formats)
-        return (doc_valid, doc_viols()) + span_checks(comp, items, elem_t,
-                                                      spans_col)
-
-    # schema-derived Columns are unresolved and name-bound: memoized so a
-    # checkpointed run's per-unit loop (checkpointing.run) and repeat batches
-    # skip the py4j expression rebuild (plan_cache docstring)
-    doc_valid, doc_viols, span_valid, span_viols = plan_memo(
-        "exploded", df, schema_json, registry,
-        (spans_col, uri, message_style, assert_formats), build)
-
-    # doc-level checks are row-local: evaluate them BEFORE the explode so the
-    # document (and its spans array) is never duplicated per span row. Only
-    # light columns (keep_cols, doc verdict, doc violations) ride through the
-    # generator; the shuffle payload is per-doc verdicts, not document bytes.
-    requested = keep_cols if keep_cols is not None else [df.columns[0]]
-    keep = [c for c in requested if c != spans_col]
-    # opting the spans column into the output carries the array through the
-    # explode (one copy per span row) — correct but heavier; default keeps
-    # only light id columns, which is the 100 TB-appropriate contract
-    keep_spans = spans_col in requested
-    pre = df.select(F.monotonically_increasing_id().alias("_rid"),
-                    *keep,
-                    doc_valid.alias("_dok"), doc_viols.alias("_dviols"),
-                    F.col(spans_col).alias("_spans"))
-    base = pre.select("_rid", *keep, "_dok", "_dviols",
-                      *(["_spans"] if keep_spans else []),
-                      F.posexplode_outer("_spans").alias("_pos", "_span"))
-
-    per_row = (base
-               .select("_rid", *keep, "_dok", "_dviols", "_pos",
-                       *(["_spans"] if keep_spans else []),
-                       span_valid.alias("_sv"), span_viols.alias("_svv"))
-               .groupBy("_rid")
-               .agg(*[F.first(c).alias(c) for c in keep],
-                    *([F.first("_spans").alias(spans_col)] if keep_spans else []),
-                    F.first("_dok").alias("_dok"),
-                    F.first("_dviols").alias("_dviols"),
-                    F.min(F.col("_sv").cast("int")).alias("_all_ok"),
-                    # collect (pos, viols) pairs, order by pos for determinism
-                    F.flatten(F.transform(
-                        F.array_sort(F.collect_list(
-                            F.when(F.size("_svv") > 0,
-                                   F.struct(F.col("_pos").alias("p"),
-                                            F.col("_svv").alias("v"))))),
-                        lambda e: e.getField("v"))).alias("_sviols")))
-
-    valid = F.col("_dok") & (F.col("_all_ok") == 1)
-    viols = F.concat(F.col("_dviols"),
-                     F.coalesce(F.col("_sviols"), F.array().cast(VIOLATION_SCHEMA)))
-    return per_row.select(*keep,
-                          *([spans_col] if keep_spans else []),
-                          valid.alias("valid"),
-                          F.coalesce(viols, F.array().cast(VIOLATION_SCHEMA))
-                           .alias("violations"))
-
-
 def violation_rows_fast(
     df: DataFrame,
     schema_json: Any,
@@ -250,11 +167,11 @@ def violation_rows_fast(
     ZERO shuffle and one scan — the 100 TB production shape for the
     BASELINE.json violation-row output.
 
-    The explode strategy's groupBy exists only to reassemble per-doc
-    violation ARRAYS; when the deliverable is rows, we can skip it: posexplode
-    spans, evaluate the span plan flat (codegen), emit span violations where
-    they occur, and attach the doc-level violations once per doc on the first
-    generator row (_pos 0 or null-spans row). Plan = Scan -> Generate ->
+    When the deliverable is rows, no per-doc violation ARRAY has to be
+    reassembled: posexplode spans, evaluate the span plan flat (codegen),
+    emit span violations where they occur, and attach the doc-level
+    violations once per doc on the first generator row (_pos 0 or
+    null-spans row). Plan = Scan -> Generate ->
     Project -> Filter -> Generate; every stage is pipelined, nothing moves.
     """
     def build() -> tuple:
@@ -303,12 +220,12 @@ def violation_rows_best(
     assert_formats: bool = False,
 ) -> DataFrame:
     """Violation rows with a fused-verdict PREFILTER (r2): the cheap fused
-    boolean (codegen, zero shuffle, no lambdas) screens out passing docs
-    first, so only failing docs — rare at production quality rates (~2% in
+    boolean (codegen, zero shuffle; no lambdas on the fused subset) screens
+    out passing docs first, so only failing docs — rare at production quality rates (~2% in
     the bench corpus) — pay the posexplode + per-span violation collection.
     Output is row-identical to violation_rows_fast (passing docs contribute
     no rows by definition; pinned in tests). The chain has one decline
-    signal, CompileFallback: a schema outside the fused subset skips the
+    signal, CompileFallback: a schema the fused plan declines skips the
     prefilter, and when violation_rows_fast declines too the rows come from
     :func:`violation_rows` over :func:`validate_spans_best`, whose own last
     resort is the interpreter — so every schema the interpreter accepts
@@ -556,21 +473,19 @@ def validate_spans_best(df: DataFrame, schema_json: Any,
                         message_style: str = "structured",
                         assert_formats: bool = False) -> DataFrame:
     """Best-available strategy chain for spans-shaped document tables:
-    fused-array (codegen, zero shuffle) -> explode+agg (codegen, verdict
-    shuffle) -> forall projection (interpreted HOF, zero shuffle) -> the
-    Arrow-batch interpreter. The columnar strategies are verdict- and
-    violation-equivalent (pytest-pinned) and decline with one signal,
-    CompileFallback (FusedUnsupported is a subclass), which moves the chain
-    to the next strategy; the interpreter takes what none of them can
-    express, so the chain is total. SchemaCycleError is not a decline and
-    stays loud.
+    fused-array (codegen, zero shuffle; what its array algebra cannot
+    express goes through the keyword walk inside the same projection) ->
+    forall projection (interpreted HOF, zero shuffle; inputs that are not
+    spans-shaped) -> the Arrow-batch interpreter. The columnar strategies
+    are verdict- and violation-equivalent (pytest-pinned) and decline with
+    one signal, CompileFallback, which moves the chain to the next
+    strategy; the interpreter takes what neither can express, so the chain
+    is total. SchemaCycleError is not a decline and stays loud.
 
     keep_cols=None means ALL input columns on every branch (normalized
-    here; the explode strategy's own light-columns default applies only
-    when it is called directly — r3 review: the chain's output schema must
-    not depend on which strategy happened to compile). Pre-existing
-    'valid'/'violations' columns are REPLACED, never duplicated, matching
-    the other validators' contract."""
+    here: the chain's output schema must not depend on which strategy
+    happened to compile). Pre-existing 'valid'/'violations' columns are
+    REPLACED, never duplicated, matching the other validators' contract."""
     if keep_cols is None:
         keep_cols = [c for c in df.columns if c not in ("valid", "violations")]
     opts = dict(registry=registry, uri=uri, message_style=message_style,
@@ -580,8 +495,7 @@ def validate_spans_best(df: DataFrame, schema_json: Any,
         return validate_dataframe(df, schema_json, **opts) \
             .select(*keep_cols, "valid", "violations")
 
-    for strategy in (validate_documents_fused, validate_documents_exploded,
-                     forall):
+    for strategy in (validate_documents_fused, forall):
         try:
             return strategy(df, schema_json, spans_col=spans_col,
                             keep_cols=keep_cols, **opts)

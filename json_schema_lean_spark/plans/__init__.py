@@ -1,1 +1,1 @@
-from .fused import FusedUnsupported, validate_documents_fused  # noqa: F401
+from .fused import validate_documents_fused  # noqa: F401

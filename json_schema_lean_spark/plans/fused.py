@@ -27,12 +27,18 @@ general forall plan gated behind the fused verdict — Catalyst's conditional
 evaluation means only failing rows (rare at production quality rates) ever
 evaluate the interpreted collector. One scan, zero shuffle, full detail.
 
-Schemas outside the supported subset raise :class:`FusedUnsupported`, a
-``CompileFallback``: the spans chain's one decline signal, on which
-``validate_spans_best`` tries the explode strategy (shuffle, full keyword
-coverage), the forall plan and, last, the Arrow-batch interpreter. The
-doc-level half (shape guards, the schema minus ``items``) is
-``operators.validation.split_doc_spans``, shared with those strategies.
+What the array algebra cannot express is lowered through the one keyword
+walk (``ColumnarCompiler.lower_node``) instead: a property outside the
+subset becomes ``forall(arr.k, e -> e IS NULL OR walk(sub).valid(e))``
+over its field array, and an items schema outside it (element keywords,
+non-object elements, type mismatches, unresolvable or too-deep ``$ref``
+chains) becomes ``forall(arr, walk(items).valid)``. Answer from the cheap
+form what it can, consult the full form for the rest (Column Sketches,
+SIGMOD 2018). So the plan declines — with ``CompileFallback``, the spans
+chain's one decline signal — only where the input is not spans-shaped
+(``operators.validation.split_doc_spans``) or the walk itself cannot
+lower the schema; ``validate_spans_best`` then tries the forall plan and,
+last, the Arrow-batch interpreter.
 """
 
 from __future__ import annotations
@@ -52,10 +58,10 @@ from pyspark.sql.types import (
 from ..compiler import (
     VIOLATION_SCHEMA,
     ColumnarCompiler,
-    CompileFallback,
     _FRACTIONAL,
     _INTEGRAL,
     _let,
+    _passes,
     _static_type_names,
 )
 from ..plan_cache import plan_memo
@@ -63,14 +69,15 @@ from ..resolver import resolve_uri
 from ..schema_ast import ABSENT, Schema, SchemaObject, parse_schema
 
 
-class FusedUnsupported(CompileFallback):
-    """Schema/keyword outside the fused subset — use a general strategy."""
+class FusedUnsupported(Exception):
+    """Schema/keyword outside the fused subset: the caller lowers that part
+    through the keyword walk. Never leaves this module."""
 
 
 #: pattern of patterns we can fuse: anchored literal prefix, no metachars.
 #: NOTE: '.' is deliberately NOT admitted — it is a regex metacharacter, and
 #: the fused path treats the prefix literally (string-range check), so
-#: '^foo.bar' must fall back to the general strategies where it keeps its
+#: '^foo.bar' must go through the keyword walk where it keeps its
 #: any-char meaning (ADVICE r1: dotted patterns diverged here). ASCII-only
 #: is also what makes the range check's succ() byte-order argument exact.
 #: ``\Z``, not ``$``: ``$`` would also admit a trailing newline.
@@ -102,7 +109,19 @@ def fused_items_verdict(comp: ColumnarCompiler, items_schema: Schema,
                         base_uri: str, arr: Column,
                         elem_dtype: Any) -> Column:
     """Verdict column: every element of `arr` satisfies `items_schema`.
-    Raises FusedUnsupported outside the expressible subset."""
+    Outside the fused subset the element verdict comes from the keyword
+    walk (a JSON-null element is a JSON null there: null_means='null')."""
+    try:
+        return _fused_items(comp, items_schema, base_uri, arr, elem_dtype)
+    except FusedUnsupported:
+        return F.forall(arr, _passes(comp.lower_node(
+            items_schema, elem_dtype, base_uri=base_uri, null_means="null")))
+
+
+def _fused_items(comp: ColumnarCompiler, items_schema: Schema,
+                 base_uri: str, arr: Column, elem_dtype: Any) -> Column:
+    """The array-algebra verdict of :func:`fused_items_verdict`; raises
+    FusedUnsupported when the items schema leaves the subset."""
     items_schema, base_uri = _resolve_once(comp, items_schema, base_uri)
     if items_schema is True:
         return F.lit(True)
@@ -167,18 +186,28 @@ def fused_items_verdict(comp: ColumnarCompiler, items_schema: Schema,
     for name, sub in (s.properties or []):
         if name not in field_type:
             continue  # field never present -> check never fires
-        sub, sub_uri = _resolve_once(comp, sub, base_uri)
-        if isinstance(sub, bool):
-            if sub:
+        field = arr.getField(name)
+        try:
+            resolved, _ = _resolve_once(comp, sub, base_uri)
+            if resolved is True:
                 continue
-            # false schema: field must never be present
-            prop_clauses.append(
-                F.size(F.array_compact(arr.getField(name))) == 0)
-            continue
-        cl, covers_nulls = _fused_property_clauses(
-            sub, arr.getField(name), field_type[name],
-            assert_formats=getattr(comp, "assert_formats", False),
-            nulls_ruled_out=(not nulls_legal and name in required_real))
+            if resolved is False:
+                # false schema: field must never be present
+                prop_clauses.append(F.size(F.array_compact(field)) == 0)
+                continue
+            cl, covers_nulls = _fused_property_clauses(
+                resolved, field, field_type[name],
+                assert_formats=comp.assert_formats,
+                nulls_ruled_out=(not nulls_legal and name in required_real))
+        except FusedUnsupported:
+            # a NULL in the field array is an absent key (or a null
+            # element, which the element clauses judge): it passes before
+            # the walk, whose verdict on NULL need not be true
+            # (e.g. {"not": {}})
+            ok = _passes(comp.lower_node(sub, field_type[name],
+                                         base_uri=base_uri))
+            cl = [F.forall(field, lambda e: e.isNull() | ok(e))]
+            covers_nulls = False
         prop_clauses.extend(cl)
         if covers_nulls:
             null_covered.add(name)
@@ -292,7 +321,7 @@ def _fused_property_clauses(s: SchemaObject, field_arr: Column,
         s.max_properties is not None, s.min_properties is not None,
         s.property_names is not None, s.additional_items is not None,
         # format assertion is the general compiler's job (rlike + calendar
-        # check); refusing here routes the chain to the exploded strategy
+        # check); refusing here hands the property to the keyword walk
         # rather than silently dropping the assertion
         assert_formats and s.format is not None,
     ]
@@ -408,9 +437,9 @@ def validate_documents_fused(
     """Full validation at fused speed: fused verdict + forall-plan violation
     detail evaluated ONLY on failing rows. Output schema matches
     ``validate_dataframe`` restricted to keep_cols (default: all columns).
-    Raises FusedUnsupported when the schema leaves the fused subset, and
-    CompileFallback when the input is not spans-shaped or the doc level
-    does not lower."""
+    Raises CompileFallback when the input is not spans-shaped or the
+    keyword walk cannot lower the doc level or a part of the items schema
+    outside the fused subset."""
     from ..operators.validation import split_doc_spans
 
     def build() -> dict:

@@ -1,12 +1,13 @@
 """Cross-strategy soak: random span-document schemas x random documents;
-forall / explode / fused strategies and the validate_spans_best chain must
-all reproduce the interpreter's verdicts. Run ad hoc from any directory:
+the forall and fused strategies and the validate_spans_best chain must all
+reproduce the interpreter's verdicts. Run ad hoc from any directory:
 
     python scripts/strategy_soak.py [max_examples]   # default 150
 
 Prints one JSON line: examples_chain (validate_spans_best checked: every
-example), examples_2paths (forall and explode both compiled) and
-examples_all3 (the fused subset too).
+example), examples_forall (the forall plan compiled) and examples_fused
+(the fused plan compiled; it declines only where the keyword walk cannot
+lower the schema, so this should equal max_examples).
 """
 import json, os, sys
 from pathlib import Path
@@ -20,7 +21,7 @@ spark = (SparkSession.builder
 spark.sparkContext.setLogLevel("ERROR")
 from json_schema_lean_spark.interpreter import CompiledValidator
 from json_schema_lean_spark.operators.validation import (
-    validate_dataframe, validate_documents_exploded, validate_spans_best)
+    validate_dataframe, validate_spans_best)
 from json_schema_lean_spark.plans import validate_documents_fused
 from json_schema_lean_spark.compiler import CompileFallback
 
@@ -81,7 +82,7 @@ def to_json_doc(doc_id, spans):
                         for s in spans]
     return doc
 
-checked = {"examples_all3": 0, "examples_2paths": 0, "examples_chain": 0}
+checked = {"examples_chain": 0, "examples_forall": 0, "examples_fused": 0}
 @settings(max_examples=MAX_EXAMPLES, deadline=None,
           suppress_health_check=list(HealthCheck))
 @given(schema=schema_gen(), data=spans_gen())
@@ -98,22 +99,16 @@ def run(schema, data):
             for r in validate_spans_best(df, schema).collect()}
     assert best == expected, ("chain", schema, data, best, expected)
     checked["examples_chain"] += 1
-    try:
-        a = {r["doc_id"]: r["valid"] for r in validate_dataframe(df, schema).collect()}
-    except CompileFallback:
-        return
-    assert a == expected, ("forall", schema, data, a, expected)
-    b = {r["doc_id"]: r["valid"]
-         for r in validate_documents_exploded(df, schema).collect()}
-    assert b == expected, ("exploded", schema, data, b, expected)
-    checked["examples_2paths"] += 1
-    try:
-        c = {r["doc_id"]: r["valid"]
-             for r in validate_documents_fused(df, schema, keep_cols=["doc_id"]).collect()}
-    except CompileFallback:  # FusedUnsupported included
-        return
-    assert c == expected, ("fused", schema, data, c, expected)
-    checked["examples_all3"] += 1
+    for name, strategy in (
+            ("forall", lambda: validate_dataframe(df, schema)),
+            ("fused", lambda: validate_documents_fused(
+                df, schema, keep_cols=["doc_id"]))):
+        try:
+            got = {r["doc_id"]: r["valid"] for r in strategy().collect()}
+        except CompileFallback:
+            continue
+        assert got == expected, (name, schema, data, got, expected)
+        checked[f"examples_{name}"] += 1
 
 run()
 print(json.dumps({"max_examples": MAX_EXAMPLES, **checked}))

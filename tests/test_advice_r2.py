@@ -5,20 +5,15 @@ scenario the advisor described.
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from json_schema_lean_spark.compiler import ColumnarCompiler
 from json_schema_lean_spark.interpreter import CompiledValidator
 from json_schema_lean_spark.operators.validation import (
     validate_dataframe,
-    validate_documents_exploded,
     validate_spans_best,
 )
-from json_schema_lean_spark.plans.fused import (
-    FusedUnsupported,
-    validate_documents_fused,
-)
+from json_schema_lean_spark.plans.fused import validate_documents_fused
 
 DDL = ("doc_id string, spans array<struct<kind:string,text:string,"
        "media_ref:string,offset:int>>")
@@ -57,9 +52,14 @@ class TestDottedPatternNotFusedLiterally:
         }
 
     def test_fused_refuses_dotted_pattern(self, spark):
+        """The fused plan does not take '^foo.bar' as a literal prefix: it
+        lowers the pattern through the keyword walk, where '.' keeps its
+        any-char meaning."""
         df = spark.createDataFrame(self.ROWS, DDL)
-        with pytest.raises(FusedUnsupported):
-            validate_documents_fused(df, self.SCHEMA, keep_cols=["doc_id"])
+        got = {r["doc_id"]: r["valid"]
+               for r in validate_documents_fused(
+                   df, self.SCHEMA, keep_cols=["doc_id"]).collect()}
+        assert got == self.expected()
 
     def test_best_strategy_agrees_with_interpreter(self, spark):
         df = spark.createDataFrame(self.ROWS, DDL)
@@ -112,7 +112,7 @@ class TestPropertyNamesRefResolution:
 
 
 class TestRootRelativeRefsInItems:
-    """ADVICE medium: the explode/violation-row strategies built a synthetic
+    """ADVICE medium: the spans/violation-row strategies built a synthetic
     root that dropped everything but $id/definitions, so an items $ref into
     '#/properties/...' silently lowered to constant-false."""
 
@@ -151,7 +151,8 @@ class TestRootRelativeRefsInItems:
     def test_exploded_resolves_ref_into_properties(self, spark):
         df = spark.createDataFrame(self.ROWS, DDL)
         got = {r["doc_id"]: r["valid"]
-               for r in validate_documents_exploded(df, self.SCHEMA).collect()}
+               for r in validate_documents_fused(
+                   df, self.SCHEMA, keep_cols=["doc_id"]).collect()}
         exp = self.expected()
         assert got == exp
         assert exp == {"d1": True, "d2": False, "d3": True}

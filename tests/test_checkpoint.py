@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from json_schema_lean_spark.checkpointing import CheckpointedValidation
-from json_schema_lean_spark.operators.validation import validate_documents_exploded
+from json_schema_lean_spark.operators.validation import validate_spans_best
 from json_schema_lean_spark.sources.spansgen import SPAN_SCHEMA, spans_documents
 
 
@@ -40,7 +40,7 @@ def test_kill_and_resume_identical(spark, spans_path, tmp_path):
     assert r2.units_processed == r1.units_total - 2
 
     resumed = canon(ck.results().collect())
-    fresh = canon(validate_documents_exploded(
+    fresh = canon(validate_spans_best(
         spark.read.parquet(spans_path), SPAN_SCHEMA).collect())
     assert resumed == fresh
 
@@ -114,7 +114,7 @@ def test_range_partitioned_output(spark, spans_path, tmp_path):
                for e in ck.manifest())
 
     got = canon(ck.results().collect())
-    fresh = canon(validate_documents_exploded(
+    fresh = canon(validate_spans_best(
         spark.read.parquet(spans_path), SPAN_SCHEMA).collect())
     assert got == fresh
 
@@ -364,7 +364,7 @@ def test_concurrent_units_with_range_partitions(spark, spans_path, tmp_path):
                                 files_per_unit=2, range_partitions=2,
                                 warm_start=False, concurrent_units=4)
     ck.run()
-    assert canon(ck.results().collect()) == canon(validate_documents_exploded(
+    assert canon(ck.results().collect()) == canon(validate_spans_best(
         spark.read.parquet(spans_path), SPAN_SCHEMA).collect())
     assert sum(e["rows_scanned"] for e in ck.manifest()) == \
         spark.read.parquet(spans_path).count()

@@ -94,23 +94,6 @@ def test_cycle_rejected_at_compile_time():
         ColumnarCompiler(cyc)
 
 
-def test_explode_strategy_matches_forall(spark):
-    from json_schema_lean_spark.operators.validation import validate_documents_exploded
-
-    docs = spans_documents(spark, 800)
-
-    def canon(rows):
-        return sorted(
-            (r["doc_id"], r["valid"],
-             tuple(sorted((v["keyword"], v["json_pointer"]) for v in r["violations"])))
-            for r in rows)
-
-    a = canon(validate_dataframe(docs, SPAN_SCHEMA)
-              .select("doc_id", "valid", "violations").collect())
-    b = canon(validate_documents_exploded(docs, SPAN_SCHEMA).collect())
-    assert a == b
-
-
 def test_fused_strategy_matches_forall(spark):
     from json_schema_lean_spark.plans import validate_documents_fused
 
@@ -130,14 +113,21 @@ def test_fused_strategy_matches_forall(spark):
 
 
 def test_fused_rejects_unsupported_keywords(spark):
+    """A keyword outside the fused subset (multipleOf) is lowered through
+    the keyword walk inside the fused plan: verdicts match the
+    interpreter's."""
     import json as _json
-    from json_schema_lean_spark.plans import FusedUnsupported, validate_documents_fused
+    from json_schema_lean_spark.plans import validate_documents_fused
 
-    docs = spans_documents(spark, 10)
+    docs = spans_documents(spark, 200)
     schema = _json.loads(_json.dumps(SPAN_SCHEMA))
     schema["definitions"]["span"]["properties"]["offset"]["multipleOf"] = 2
-    with pytest.raises(FusedUnsupported):
-        validate_documents_fused(docs, schema)
+    ref = CompiledValidator(schema)
+    rows = validate_documents_fused(docs, schema).collect()
+    got = {r["doc_id"]: r["valid"] for r in rows}
+    exp = {r["doc_id"]: ref.is_valid(_doc(r)) for r in rows}
+    assert got == exp
+    assert not all(exp.values())  # odd offsets fail multipleOf 2
 
 
 def test_validate_spans_best_falls_back(spark):
@@ -147,13 +137,90 @@ def test_validate_spans_best_falls_back(spark):
     docs = spans_documents(spark, 300)
     # fused-eligible schema
     a = validate_spans_best(docs, SPAN_SCHEMA, keep_cols=["doc_id"])
-    # fused-ineligible (multipleOf) -> explode strategy, same verdicts shape
+    # multipleOf is outside the fused subset: the keyword walk lowers it
     schema = _json.loads(_json.dumps(SPAN_SCHEMA))
     schema["definitions"]["span"]["properties"]["offset"]["multipleOf"] = 1
     b = validate_spans_best(docs, schema, keep_cols=["doc_id"])
     av = {r["doc_id"]: r["valid"] for r in a.collect()}
     bv = {r["doc_id"]: r["valid"] for r in b.collect()}
     assert av == bv  # multipleOf 1 is vacuous for integers
+
+
+def _doc(row):
+    """The JSON document of an output row: its input columns, NULL fields
+    dropped."""
+    return {k: v for k, v in row_to_json(row).items()
+            if k not in ("valid", "violations")}
+
+
+def _span_schema_with(span_edit):
+    import json as _json
+
+    schema = _json.loads(_json.dumps(SPAN_SCHEMA))
+    span_edit(schema["definitions"]["span"])
+    return schema
+
+
+SPANS_DDL = ("doc_id string, spans array<struct<kind:string,text:string,"
+             "media_ref:string,offset:int>>")
+
+#: shapes outside the fused array algebra, which the fused plan lowers
+#: through the keyword walk: (schema, rows or None for generated docs,
+#: DDL, assert_formats)
+WALKED_SHAPES = {
+    "dotted_pattern": (_span_schema_with(lambda s: s["properties"][
+        "media_ref"].update(pattern="^asset:/.")), None, None, False),
+    "multipleOf": (_span_schema_with(lambda s: s["properties"][
+        "offset"].update(multipleOf=1)), None, None, False),
+    "span_minProperties": (_span_schema_with(
+        lambda s: s.update(minProperties=1)), None, None, False),
+    "not_on_null_field": (
+        _span_schema_with(lambda s: s["properties"].update(
+            media_ref={"not": {}})),
+        [("doc-1", [("text", "a", None, 0)]),
+         ("doc-2", [("image", "b", "asset://x", 1), ("text", "c", None, 2)]),
+         ("doc-3", [("text", "d", None, 0), None])],
+        SPANS_DDL, False),
+    "not_on_absent_field": (
+        _span_schema_with(lambda s: s["properties"].update(
+            media_ref={"not": {}})),
+        [("doc-1", [("text", "a", 0)]), ("doc-2", [("video", "", 3)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "offset:int>>", False),
+    "asserted_uri_format": (
+        _span_schema_with(lambda s: s["properties"]["media_ref"].update(
+            format="uri")),
+        [("doc-1", [("image", "t", "asset://a/1", 0)]),
+         ("doc-2", [("image", "t", "asset:// not a uri", 0)]),
+         ("doc-3", [("text", "t", None, 0)])],
+        SPANS_DDL, True),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(WALKED_SHAPES))
+def test_spans_chain_walks_what_fused_cannot_express(spark, shape):
+    """validate_spans_best on shapes outside the fused array algebra:
+    verdicts and (keyword, json_pointer) multisets equal the
+    interpreter's, and the executed plan stays one shuffle-free projection
+    (no Exchange, no posexplode, no Python evaluation)."""
+    from json_schema_lean_spark.operators.validation import validate_spans_best
+
+    schema, rows, ddl, assert_formats = WALKED_SHAPES[shape]
+    docs = (spans_documents(spark, 300) if rows is None
+            else spark.createDataFrame(rows, ddl))
+    out = validate_spans_best(docs, schema, assert_formats=assert_formats)
+    got = out.collect()
+    ref = CompiledValidator(schema, assert_formats=assert_formats)
+    for row in got:
+        doc = _doc(row)
+        assert row["valid"] is ref.is_valid(doc), (shape, doc)
+        assert sorted((v["keyword"], v["json_pointer"])
+                      for v in row["violations"]) == sorted(
+            (v.keyword, v.json_pointer) for v in ref.validate(doc)), doc
+    assert any(r["valid"] for r in got) and not all(r["valid"] for r in got)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for node in ("Exchange", "posexplode", "Generate", "EvalPython"):
+        assert node not in plan, (shape, node)
 
 
 def test_violation_rows_fast_matches_general_path(spark):
@@ -185,7 +252,7 @@ def test_null_array_element_is_json_null(spark):
     null); a NULL struct FIELD is an absent key (passes). All strategies."""
     from json_schema_lean_spark.interpreter import validate_json
     from json_schema_lean_spark.operators.validation import (
-        validate_documents_exploded,
+        validate_spans_best,
         violation_rows_fast,
     )
     from json_schema_lean_spark.plans import validate_documents_fused
@@ -213,7 +280,7 @@ def test_null_array_element_is_json_null(spark):
     assert validate_dataframe(df, SPAN_SCHEMA).collect()[0]["valid"] is False
     assert validate_documents_fused(df, SPAN_SCHEMA,
                                     keep_cols=["doc_id"]).collect()[0]["valid"] is False
-    assert validate_documents_exploded(df, SPAN_SCHEMA).collect()[0]["valid"] is False
+    assert validate_spans_best(df, SPAN_SCHEMA).collect()[0]["valid"] is False
     vr = violation_rows_fast(df, SPAN_SCHEMA, id_cols=["doc_id"]).collect()
     assert [(r["keyword"], r["json_pointer"]) for r in vr] == [("type", "/spans/1")]
 

@@ -197,15 +197,13 @@ def test_plan_cache_keys_on_assert_formats(spark):
 
 
 def test_spans_chain_does_not_drop_format_assertion(spark):
-    """validate_spans_best with assert_formats=True: the fused strategy
-    cannot express format, so it must REFUSE (FusedUnsupported) and the
-    chain lands on the exploded/columnar strategy with the assertion
-    intact — never a silently-annotation fused plan."""
+    """validate_spans_best with assert_formats=True: the fused array
+    algebra cannot express format, so the fused plan hands the property to
+    the keyword walk with the assertion intact — never a silently-
+    annotation fused plan."""
+    from json_schema_lean_spark.interpreter import CompiledValidator
     from json_schema_lean_spark.operators.validation import validate_spans_best
-    from json_schema_lean_spark.plans.fused import (
-        FusedUnsupported,
-        validate_documents_fused,
-    )
+    from json_schema_lean_spark.plans.fused import validate_documents_fused
 
     ddl = ("doc_id string, spans array<struct<kind:string,text:string,"
            "media_ref:string,offset:int>>")
@@ -221,15 +219,20 @@ def test_spans_chain_does_not_drop_format_assertion(spark):
             ("bad", [("image", "t", "not a uri", 0)])]
     df = spark.createDataFrame(rows, ddl)
 
-    # fused refuses with the assertion on...
-    with pytest.raises(FusedUnsupported):
-        validate_documents_fused(df, schema, assert_formats=True)
-    # ...but still fuses with it off (format is annotation)
+    # fused asserts the format with the assertion on, as the interpreter
+    # does...
+    ref = CompiledValidator(schema, assert_formats=True)
+    out = {r["doc_id"]: r["valid"] for r in validate_documents_fused(
+        df, schema, assert_formats=True).collect()}
+    assert out == {d: ref.is_valid({"doc_id": d, "spans": [dict(zip(
+        ("kind", "text", "media_ref", "offset"), s)) for s in spans]})
+        for d, spans in rows} == {"ok": True, "bad": False}
+    # ...and treats it as an annotation with it off
     out = {r["doc_id"]: r["valid"]
            for r in validate_documents_fused(df, schema).collect()}
     assert out == {"ok": True, "bad": True}
 
-    # the chain asserts through the exploded strategy
+    # the chain asserts through the fused plan
     out = {r["doc_id"]: r["valid"] for r in validate_spans_best(
         df, schema, assert_formats=True).collect()}
     assert out == {"ok": True, "bad": False}

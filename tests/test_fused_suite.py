@@ -1,16 +1,15 @@
-"""Conformance-suite subset replay through the FUSED and EXPLODED spans
-strategies (VERDICT r2 #8).
+"""Conformance-suite subset replay through the FUSED spans strategy
+(VERDICT r2 #8).
 
-Those two strategies carry the flagship 100-TB plans (fused verdict: one
-codegen'd Project; exploded: posexplode + codegen predicates + tiny-payload
-re-agg) but previously relied on the soak script + operator tests alone.
-Here every object-shaped suite case is wrapped as a spans-document —
+The fused verdict carries the flagship 100-TB plan (one codegen'd Project)
+but previously relied on the soak script + operator tests alone. Here
+every object-shaped suite case is wrapped as a spans-document —
 ``{"spans": [<instance>]}`` with schema
 ``{"properties": {"spans": {"type": "array", "items": <case schema>}}}`` —
-so the document verdict equals the case verdict, and replayed through BOTH
-strategies. Cases outside a strategy's subset (CompileFallback, which
-FusedUnsupported subclasses) are skipped with accounting; a floor keeps the
-subset from silently eroding.
+so the document verdict equals the case verdict, and replayed through the
+fused plan. What its array algebra cannot express goes through the keyword
+walk inside the same plan, so every wrapped case replays: a decline
+(CompileFallback) fails the test as surely as a wrong verdict.
 """
 
 import json
@@ -23,15 +22,12 @@ from pyspark.sql.types import ArrayType, StructField, StructType
 from json_schema_lean_spark.compiler import CompileFallback
 from json_schema_lean_spark.inference import Ineligible, _infer, _merge, _solidify
 from json_schema_lean_spark.metaschema import META_REGISTRY
-from json_schema_lean_spark.operators.validation import (
-    validate_documents_exploded,
-)
 from json_schema_lean_spark.plans.fused import validate_documents_fused
 
 FIXTURES = Path(__file__).resolve().parent.parent / "fixtures"
 SUITE_DIRS = [FIXTURES / "suite", FIXTURES / "suite_official" / "draft7"]
 
-#: deterministic cap — one spark job per case per strategy; enough for
+#: deterministic cap — one spark job per case; enough for
 #: meaningful differential mileage without minutes of wall clock
 MAX_CASES = 80
 
@@ -73,9 +69,9 @@ def wrapped_cases():
     return out[:MAX_CASES]
 
 
-def _replay(spark, strategy, floor):
+def test_suite_subset_through_fused_strategy(spark):
     cases = wrapped_cases()
-    assert len(cases) >= 60, len(cases)
+    assert len(cases) >= 61, len(cases)
     replayed, skipped, bad = 0, [], []
     for cid, schema, case_uri, case_schema, elem_dt, tests in cases:
         doc_dt = StructType([
@@ -89,8 +85,9 @@ def _replay(spark, strategy, floor):
               .select(F.from_json(F.col("j"), doc_dt).alias("d"))
               .select("d.i", "d.spans"))
         try:
-            out = strategy(df, schema, keep_cols=["i"],
-                           registry={**META_REGISTRY, case_uri: case_schema})
+            out = validate_documents_fused(
+                df, schema, keep_cols=["i"],
+                registry={**META_REGISTRY, case_uri: case_schema})
         except CompileFallback as e:
             skipped.append((cid, str(e)[:60]))
             continue
@@ -99,17 +96,5 @@ def _replay(spark, strategy, floor):
             if bool(got[i]) != exp:
                 bad.append((cid, data, exp, got[i]))
         replayed += 1
-    assert replayed >= floor, (replayed, skipped[:10])
+    assert replayed == len(cases), (replayed, skipped[:10])
     assert not bad, bad[:10]
-
-
-def test_suite_subset_through_exploded_strategy(spark):
-    # explode accepts any Single-items schema: nearly every case replays
-    _replay(spark, validate_documents_exploded, floor=55)
-
-
-def test_suite_subset_through_fused_strategy(spark):
-    # the fused subset is narrower BY DESIGN (static type satisfaction,
-    # struct elements, no interpreted fallbacks) — cases outside it fall to
-    # the exploded strategy in validate_spans_best
-    _replay(spark, validate_documents_fused, floor=20)

@@ -70,18 +70,6 @@ def test_fused_verdict_counts_stable(spark, spans_path):
     assert a == b > 0
 
 
-def test_explode_plan_partial_aggregation(spark, spans_path):
-    """The explode strategy's shuffle must be preceded by a partial
-    (map-side) aggregation so only per-doc partials move."""
-    from json_schema_lean_spark.operators.validation import (
-        validate_documents_exploded,
-    )
-    spans = spark.read.parquet(spans_path)
-    out = validate_documents_exploded(spans, SPAN_SCHEMA)
-    plan = explain_str(out, "simple")
-    assert plan.count("HashAggregate") >= 2  # partial + final
-
-
 def test_fused_length_widening_matches_interpreter(spark):
     """r2 widening: minLength>1 / maxLength fuse via the newline-join regex
     trick. Pin verdict equality with the interpreter across the tricky

@@ -105,13 +105,10 @@ class TestGoldensOnAllFourPaths:
         assert got == {("required", "/work", GOLDEN_REQUIRED)}
 
     def test_fused(self, spark):
-        # the fused plan statically REJECTS schemas whose type checks can
-        # never pass the dtype (by design — the strategy chain falls back to
-        # exploded), so the type golden rides the EXPLODED strategy; the
-        # required golden exercises the fused plan's runtime compression
-        from json_schema_lean_spark.operators.validation import (
-            validate_documents_exploded,
-        )
+        # a type check that can never pass the dtype leaves the fused
+        # array algebra: the type golden comes from the keyword walk inside
+        # the fused plan; the required golden exercises the fused plan's
+        # runtime compression
         df = spark.createDataFrame([(1, [(42,)])],
                                    "doc_id int, spans array<struct<txt:long>>")
         schema = {"type": "object",
@@ -119,7 +116,7 @@ class TestGoldensOnAllFourPaths:
                       "type": "array",
                       "items": {"type": "object",
                                 "properties": {"txt": {"type": "string"}}}}}}
-        out = validate_documents_exploded(df, schema,
+        out = validate_documents_fused(df, schema,
                                           message_style="reference",
                                           keep_cols=["doc_id"])
         [row] = out.collect()
